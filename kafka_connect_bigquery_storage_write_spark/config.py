@@ -41,7 +41,7 @@ class PipelineConfig:
     sink_schema_evolution: str = "frozen"
     # CDC/upsert ingestion (round 8, extension beyond the reference's
     # append-only sink): when ``upsert_keys`` is set, each micro-batch's
-    # valid rows apply as a keyed MERGE (ManifestSinkTable.merge_rows —
+    # valid rows apply as a keyed MERGE (ManifestSinkTable.merge_rows_pruned —
     # WHEN MATCHED UPDATE / WHEN NOT MATCHED INSERT) instead of an
     # append. ``upsert_order_col`` names the column that orders multiple
     # changes to one key WITHIN a batch (latest wins); without it a

@@ -590,10 +590,11 @@ def q171_schema_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q176_sink_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Keyed MERGE/upsert made driver-visible (the copy-on-write write
     path beside q169/q170/q171's read paths): orders land as two
-    batches, then ONE merge_rows call updates every key divisible by 97
-    (new totalprice = 2*key) AND inserts 50 fresh keys with status 'U' —
-    the SQL MERGE WHEN MATCHED UPDATE / WHEN NOT MATCHED INSERT shape,
-    materialized as one atomic snapshot (ManifestSinkTable.rewrite).
+    batches, then ONE merge_rows_pruned call updates every key divisible
+    by 97 (new totalprice = 2*key) AND inserts 50 fresh keys with status
+    'U' — the SQL MERGE WHEN MATCHED UPDATE / WHEN NOT MATCHED INSERT
+    shape, materialized as one atomic snapshot (the sink's copy-on-write
+    rewrite core).
     The read-back aggregate must equal the SQL emulation (CASE + UNION)
     over the source; a row updated twice, an insert lost, or an
     unmatched row disturbed all shift the per-status sums.
@@ -616,7 +617,7 @@ def q176_sink_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("id").cast("double") * 1.5).alias("o_totalprice"),
         )
     )
-    if sink.merge_rows(spark, updates, keys=["o_orderkey"]) is None:
+    if sink.merge_rows_pruned(spark, updates, keys=["o_orderkey"]) is None:
         raise RuntimeError("q176 merge lost the snapshot CAS unexpectedly")
     out = (
         sink.read(spark)
@@ -655,8 +656,8 @@ def q177_cdc_upsert_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     changes (key user_id, change order event_id) and ingested in three
     arrival-ordered micro-batches with ``upsert_keys`` set — each batch
     reduces to its latest change per key, then MERGES onto the sink
-    (ManifestSinkTable.merge_rows under merge-marker idempotence). The
-    sink's final content must be exactly the globally-latest change per
+    (ManifestSinkTable.merge_rows_pruned under merge-marker idempotence).
+    The sink's final content must be exactly the globally-latest change per
     user, which the oracle computes as one rank window over the source.
     A lost insert, a stale replace, or a within-batch order slip all
     change some user's surviving row.
@@ -1236,7 +1237,7 @@ def q208_cdc_change_feed_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         if bid == 0:
             b_sink.write_batch(rows, bid)
         else:
-            assert b_sink.merge_rows(spark, rows, keys=["user_id"]) is not None
+            assert b_sink.merge_rows_pruned(spark, rows, keys=["user_id"]) is not None
         cursor = bid
 
     # the replay contract, content-compared (not just counts)
@@ -1321,7 +1322,7 @@ def q215_sink_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sink.write_batch(inserts.coalesce(1), 3)  # arrives AFTER the travel anchor
     updates = src.filter(F.col("k") % 50 == 0).withColumn("cents", F.col("cents") + 111)
-    assert sink.merge_rows(spark, updates, keys=["k"]) is not None
+    assert sink.merge_rows_pruned(spark, updates, keys=["k"]) is not None
     assert sink.delete_where_dv(spark, [("k", ">=", 100), ("k", "<", 300)]) is not None
     d = sink.diff(spark, from_batch_id=2, key_cols=["k"])
     out = (
@@ -1422,15 +1423,15 @@ def q216_bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q217_sink_merge_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FILE-LEVEL copy-on-write MERGE made driver-visible (VERDICT r9 #1;
-    q176's shape, but through ``merge_rows_pruned``): orders land as
+    q176's shape on a range-clustered layout): orders land as
     FOUR disjoint key-range batches (one file each), then one MERGE
     updates only keys inside the FIRST range (price = 3*key for key%7==0)
     and inserts 50 fresh keys above the table maximum. Zone maps prove
     ranges 2-4 cannot hold any update key, so the merge must rewrite
     exactly ONE file and pointer-copy THREE — asserted in-query from the
     merge's own (snapshot, rewritten, kept) result, the
-    O(touched-files)-not-O(table) pin that distinguishes this from
-    ``merge_rows``' whole-table COW. The read-back per-status aggregate
+    O(touched-files)-not-O(table) pin (q176's merge of keys spread over
+    the whole table touches every file). The read-back per-status aggregate
     must equal the SQL CASE+UNION emulation; a lost insert, a row
     updated in a pointer-copied file, or a resurrected pre-merge value
     all shift the sums.

@@ -214,9 +214,7 @@ class ChangeFeedConsumer:
             op = f"cdf-b{bid}"
             for _ in range(self.cas_retries):
                 res = self.target.merge_rows_pruned(spark, rows, keys=self.keys, op_id=op)
-                if res is not None or os.path.exists(
-                    os.path.join(self.target.root, "_commits", f"mrgop-{op}.marker")
-                ):
+                if res is not None or os.path.exists(self.target._op_marker(op)):
                     return kind
             raise RuntimeError(f"cdf consumer: merge for batch {bid} lost the CAS {self.cas_retries} times")
         return kind
@@ -250,6 +248,14 @@ class ChangeFeedConsumer:
 
         schema = self.source.schema()
         cols = [f.name for f in schema.fields]
+        for helper in ("_cdf_bid", "_cdf_max"):
+            # the run merge tags rows with these helper columns; a source
+            # column of the same name would be silently overwritten
+            if helper in cols:
+                raise ValueError(
+                    f"cdf consumer: source column {helper!r} collides with the "
+                    "consumer's run-merge helper column; rename it in the source"
+                )
         want = set(bids)
         rels = {
             b: rel
@@ -284,9 +290,7 @@ class ChangeFeedConsumer:
         op = f"cdf-b{bids[0]}" if len(bids) == 1 else f"cdf-g{bids[0]}-{bids[-1]}"
         for _ in range(self.cas_retries):
             res = self.target.merge_rows_pruned(spark, rows, keys=self.keys, op_id=op)
-            if res is not None or os.path.exists(
-                os.path.join(self.target.root, "_commits", f"mrgop-{op}.marker")
-            ):
+            if res is not None or os.path.exists(self.target._op_marker(op)):
                 return
         raise RuntimeError(
             f"cdf consumer: merge for batches {bids[0]}..{bids[-1]} lost the CAS "
@@ -313,9 +317,7 @@ class ChangeFeedConsumer:
             )
             # None is also the no-op-delete answer; the op marker records
             # consumption either way
-            if res is not None or os.path.exists(
-                os.path.join(self.target.root, "_commits", f"mrgop-{op}.marker")
-            ):
+            if res is not None or os.path.exists(self.target._op_marker(op)):
                 return
         raise RuntimeError(
             f"cdf consumer: DV {dv_indexes} delete lost the CAS {self.cas_retries} times"

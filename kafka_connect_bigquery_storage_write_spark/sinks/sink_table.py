@@ -19,13 +19,14 @@ by manifest marker files, not by which parquet files exist.
                                      unique-data-files + manifest-pointer
                                      rule), so two racing appends of one
                                      batch id can never mix files
-    <root>/data/compacted-<n>/*.parquet merged rows from a compaction —
+    <root>/data/compacted-<n>/*.parquet rows of a copy-on-write rewrite
+                                     (compaction, DELETE, MERGE) —
                                      a SEPARATE namespace from micro-batch
                                      ids, referenced only by its snapshot
     <root>/_staged/<id>.marker       batch written but invisible (pending)
     <root>/_commits/batch-<id>.marker  batch visible (committed mode)
     <root>/_commits/epoch-<n>.json   atomic publish of staged batch ids
-    <root>/_commits/snapshot-<n>.json compaction snapshot: the compacted
+    <root>/_commits/snapshot-<n>.json rewrite snapshot: the compacted
                                      dir plus the EXPLICIT set of absorbed
                                      micro-batch ids (no watermark — new
                                      micro-batch ids are never shadowed)
@@ -415,8 +416,9 @@ def _zorder_expr(cols: list[str], bounds: dict[str, tuple[float, float]], bits: 
 def _key_match(updates: DataFrame, keys: list[str]) -> tuple[DataFrame, "Column"]:
     """(distinct update-key relation aliased ``_u_<k>``, eqNullSafe join
     condition) — the ONE definition of merge key matching (NULL keys
-    match NULL), shared by ``upsert_mor``'s tombstone scan and
-    ``_verify_mor_merged`` so the two can never diverge."""
+    match NULL, as in the upsert window), shared by ``upsert_mor``'s
+    tombstone scan, ``_verify_mor_merged`` and ``merge_rows_pruned``'s
+    keyed delete so they can never diverge."""
     from pyspark.sql import functions as F
 
     upd_keys = updates.select(*[F.col(c).alias(f"_u_{c}") for c in keys]).distinct()
@@ -427,17 +429,34 @@ def _key_match(updates: DataFrame, keys: list[str]) -> tuple[DataFrame, "Column"
     return upd_keys, match
 
 
-def _apply_where(df: DataFrame, where: list[tuple] | None) -> DataFrame:
-    """Apply the conjunctive ``(column, op, literal)`` predicate DSL as a
-    row filter (the residual half of the pruned-read contract)."""
-    if where:
-        from pyspark.sql import functions as F
+def _check_ops(where: list[tuple] | None) -> None:
+    """Reject predicate ops outside the ``(column, op, literal)`` DSL."""
+    for _c, op, _v in where or ():
+        if op not in _PRUNE_OPS:
+            raise ValueError(f"unsupported predicate op {op!r}; use one of {_PRUNE_OPS}")
 
-        for c, op, v in where:
-            col = F.col(c)
-            cond = {"==": col == v, "<": col < v, "<=": col <= v, ">": col > v, ">=": col >= v}[op]
-            df = df.filter(cond)
-    return df
+
+def _where_cond(where: list[tuple]) -> "Column":
+    """The conjunctive ``(column, op, literal)`` predicate DSL as ONE
+    Column — shared by the residual read filter, the DV delete scan and
+    the copy-on-write delete, so the three can never disagree. SQL
+    three-valued logic applies: a row whose predicate is NULL (a NULL
+    operand) is neither read nor deleted."""
+    from pyspark.sql import functions as F
+
+    _check_ops(where)
+    cond = None
+    for c, op, v in where:
+        col = F.col(c)
+        this = {"==": col == v, "<": col < v, "<=": col <= v, ">": col > v, ">=": col >= v}[op]
+        cond = this if cond is None else (cond & this)
+    return cond
+
+
+def _apply_where(df: DataFrame, where: list[tuple] | None) -> DataFrame:
+    """Apply the predicate DSL as a row filter (the residual half of the
+    pruned-read contract)."""
+    return df.filter(_where_cond(where)) if where else df
 
 
 def _entry_may_match(entry: dict, where: list[tuple] | None) -> bool:
@@ -1033,60 +1052,17 @@ class ManifestSinkTable:
         commit normally. Returns the snapshot index, or None if there was
         nothing to compact.
         """
-        return self._rewrite_visible(
-            spark, None, target_files, order_by, require_multiple=True, zorder_by=zorder_by
+        res = self._cow_rewrite(
+            spark,
+            lambda _e: True,
+            target_files=target_files,
+            order_by=order_by,
+            zorder_by=zorder_by,
+            # a single data dir normally needs no compaction — unless
+            # delete vectors are pending, whose absorption is the point
+            skip=lambda n_dirs, _n, has_dvs: n_dirs == 0 or (n_dirs <= 1 and not has_dvs),
         )
-
-    def rewrite(
-        self,
-        spark: SparkSession,
-        fn,
-        target_files: int = 4,
-        order_by: list[str] | None = None,
-    ) -> int | None:
-        """COPY-ON-WRITE rewrite: replace the visible table with
-        ``fn(visible_df)`` in one atomic snapshot switch — the substrate
-        for row-level DELETE (``fn = df.filter(NOT pred)``) and keyed
-        MERGE/upsert (``merge_rows``), i.e. the Delta/Iceberg
-        copy-on-write model on this manifest. Readers before the
-        snapshot CAS see the old content, readers after see the
-        rewritten content, never a mix; concurrent rewriters race the
-        snapshot index and exactly one wins (the loser's output dir is
-        removed and it reports None — retry on the fresh state).
-        ``fn`` must preserve the table schema. Returns the snapshot
-        index, or None if the table is empty or the CAS was lost.
-
-        Scale note: this rewrites every visible file (whole-table COW —
-        correct and atomic at any size, cost proportional to the table).
-        File-level COW (rewrite only the files whose zone maps intersect
-        the predicate) needs a file-grained manifest and is the
-        documented next step; the read-side machinery (per-file stats)
-        already exists.
-        """
-        return self._rewrite_visible(spark, fn, target_files, order_by, require_multiple=False)
-
-    def delete_where(
-        self, spark: SparkSession, where: list[tuple], target_files: int = 4,
-        order_by: list[str] | None = None,
-    ) -> int | None:
-        """Row-level DELETE via copy-on-write: drops rows matching the
-        conjunctive ``(column, op, literal)`` predicates (same predicate
-        language as ``read(where=...)``)."""
-        from pyspark.sql import functions as F
-
-        for _c, op, _v in where:
-            if op not in _PRUNE_OPS:
-                raise ValueError(f"unsupported predicate op {op!r}; use one of {_PRUNE_OPS}")
-
-        def _drop(df: DataFrame) -> DataFrame:
-            cond = None
-            for c, op, v in where:
-                col = F.col(c)
-                this = {"==": col == v, "<": col < v, "<=": col <= v, ">": col > v, ">=": col >= v}[op]
-                cond = this if cond is None else (cond & this)
-            return df.filter(~cond)
-
-        return self.rewrite(spark, _drop, target_files=target_files, order_by=order_by)
+        return None if res is None else res[0]
 
     # -- shared rewrite mechanics (one listing, pointer copies, the commit) --
 
@@ -1163,27 +1139,28 @@ class ManifestSinkTable:
                 kept[carry] = e[carry]
         return kept
 
-    def _commit_rewrite_snapshot(
+    def _cas_snapshot(
         self,
-        n_snap: int,
-        new_dir: str,
-        file_entries: list[dict],
-        batch_ids: list[int],
-        absorbed: set[int],
-        dvs: list[dict],
+        n: int,
+        compacted_dirs: list[str],
+        absorbed_batch_ids: list[int],
+        files: dict[str, list[dict]],
+        absorbed_dv_ids: list[int],
+        barrier: bool = False,
     ) -> bool:
-        """The snapshot CAS every rewrite path publishes through."""
+        """The ONE writer of ``snapshot-<n>.json``: the CAS every rewrite
+        (and every barrier) publishes through."""
+        payload = {
+            "index": n,
+            "compacted_dirs": compacted_dirs,
+            "absorbed_batch_ids": absorbed_batch_ids,
+            "files": files,
+            "absorbed_dv_ids": absorbed_dv_ids,
+        }
+        if barrier:
+            payload["barrier"] = True
         return self._atomic_create(
-            os.path.join(self.root, "_commits", f"snapshot-{n_snap}.json"),
-            json.dumps(
-                {
-                    "index": n_snap,
-                    "compacted_dirs": [new_dir],
-                    "absorbed_batch_ids": sorted(absorbed | set(batch_ids)),
-                    "files": {new_dir: file_entries},
-                    "absorbed_dv_ids": sorted(self._absorbed_dv_ids() | {d["index"] for d in dvs}),
-                }
-            ),
+            os.path.join(self.root, "_commits", f"snapshot-{n}.json"), json.dumps(payload)
         )
 
     def _materialize_rewrite(
@@ -1193,16 +1170,33 @@ class ManifestSinkTable:
         out_dir: str,
         target_files: int | None,
         order_by: list[str] | None = None,
+        zorder_by: list[str] | None = None,
     ) -> None:
         """Write the rewritten rows via an attempt-unique tmp dir and move
         the parquet files into the (possibly pointer-copy-populated)
-        output dir — the one write/rename/cleanup protocol every pruned
-        rewrite shares. ``order_by`` range-clusters the rewritten subset
-        (non-bucketed tables only; the bucketed seam owns its layout)."""
+        output dir. Bucketed tables go through the bucketed seam;
+        otherwise ``order_by`` range-clusters and ``zorder_by``
+        Z-order-clusters the output (both then sort within files), and
+        a plain write coalesces to ``target_files``."""
         import shutil
 
+        from pyspark.sql import functions as F
+
         tmp_out = os.path.join(self.root, "data", f"{new_dir}.rw-{uuid.uuid4().hex[:8]}")
-        if order_by and self.bucket_spec is None:
+        if zorder_by:
+            row = df.agg(
+                *[F.min(F.col(c).cast("double")).alias(f"mn_{i}") for i, c in enumerate(zorder_by)],
+                *[F.max(F.col(c).cast("double")).alias(f"mx_{i}") for i, c in enumerate(zorder_by)],
+            ).first()
+            bounds = {c: (row[f"mn_{i}"], row[f"mx_{i}"]) for i, c in enumerate(zorder_by)}
+            df = (
+                df.withColumn("__z", _zorder_expr(zorder_by, bounds))
+                .repartitionByRange(target_files, "__z")
+                .sortWithinPartitions("__z")
+                .drop("__z")
+            )
+            df.write.mode("overwrite").parquet(tmp_out)
+        elif order_by:
             df = df.repartitionByRange(target_files, *order_by).sortWithinPartitions(*order_by)
             df.write.mode("overwrite").parquet(tmp_out)
         else:
@@ -1211,33 +1205,6 @@ class ManifestSinkTable:
             if f.endswith(".parquet"):
                 os.rename(os.path.join(tmp_out, f), os.path.join(out_dir, f))
         shutil.rmtree(tmp_out, ignore_errors=True)
-
-    def _finish_rewrite(
-        self,
-        n_snap: int,
-        new_dir: str,
-        out_dir: str,
-        kept_entries: list[dict],
-        batch_ids: list[int],
-        absorbed: set[int],
-        dvs: list[dict],
-    ) -> tuple[int, int, int] | None:
-        """Stamp stats for the rewritten files and publish the snapshot;
-        None when the CAS lost (the output dir is removed). Returns
-        ``(snapshot_index, n_rewritten, n_pointer_copied)``."""
-        import shutil
-
-        kept_names = {e["name"] for e in kept_entries}
-        rewritten = sorted(
-            f for f in os.listdir(out_dir) if f.endswith(".parquet") and f not in kept_names
-        )
-        file_entries = kept_entries + _collect_file_stats(
-            out_dir, rewritten, self.bloom_columns, self.sum_columns
-        )
-        if not self._commit_rewrite_snapshot(n_snap, new_dir, file_entries, batch_ids, absorbed, dvs):
-            shutil.rmtree(out_dir, ignore_errors=True)
-            return None
-        return n_snap, len(rewritten), len(kept_entries)
 
     def _rewrite_listing(
         self, spark: SparkSession
@@ -1326,6 +1293,115 @@ class ManifestSinkTable:
                     )
                 self.upsert_mor(spark, None, keys=list(keys), batch_id=b)
 
+    def _op_marker(self, op_id: str) -> str:
+        return os.path.join(self.root, "_commits", f"mrgop-{op_id}.marker")
+
+    def _mark_op(self, op_id: str | None, **info) -> None:
+        """CAS the replay marker of a completed (or no-op) ``op_id``."""
+        if op_id:
+            self._atomic_create(self._op_marker(op_id), json.dumps({"op_id": op_id, **info}))
+
+    def _cow_rewrite(
+        self,
+        spark: SparkSession,
+        touched,
+        transform=None,
+        *,
+        target_files: int | None,
+        order_by: list[str] | None = None,
+        zorder_by: list[str] | None = None,
+        skip=None,
+        inserts: bool = False,
+        op_id: str | None = None,
+    ) -> tuple[int, int, int] | None:
+        """THE copy-on-write rewrite every maintenance and row-level write
+        op is a short caller of (compact, binpack, DELETE, MERGE):
+
+        1. ONE ``_rewrite_listing`` for data AND DVs (ADVICE r11): the DV
+           log is read once, before the batch markers, so a MOR commit is
+           seen entire (tombstones + inserts) or not at all, and every
+           live DV reference is inside the data listing (files only
+           leave visibility via snapshots, which would make this CAS
+           lose). Void MOR DVs repair against THIS listing.
+        2. ``touched(entry) -> bool`` classifies each listed file; files a
+           visible DV references always count as touched (a pointer copy
+           would carry the tombstoned rows past the DV's absorption).
+        3. Untouched files are pointer-copied with their stats.
+        4. Touched files are read and the visible DVs applied.
+        5. ``transform(rows) -> rows`` (optional) rewrites them; it must
+           keep the table's columns. ``inserts=True`` runs it even when
+           no file is touched (a MERGE's unmatched keys still land).
+        6. The output is materialized (``_materialize_rewrite``).
+        7. One snapshot CAS publishes the new layout, absorbing every
+           listed batch and DV.
+
+        ``skip(n_dirs, n_touched, has_dvs) -> bool`` is the caller's
+        no-op rule, decided on the listing before any data moves.
+        ``op_id`` gives replay idempotence: the ``mrgop-<op_id>.marker``
+        is CAS'd on a no-op and on a won snapshot, never on a lost one.
+        Returns ``(snapshot_index, n_rewritten_files,
+        n_pointer_copied_files)``, or None when the table is empty, the
+        op is a no-op, or the snapshot CAS lost (the output dir is
+        removed — retry on the fresh state)."""
+        import shutil
+
+        if order_by and zorder_by:
+            raise ValueError("pass order_by or zorder_by, not both")
+        if self.bucket_spec is not None and (order_by or zorder_by):
+            # bucketed tables cluster by their bucket spec — a competing
+            # order would silently destroy the co-located-join layout
+            raise ValueError("bucketed tables cluster by bucket_spec; order_by/zorder_by unsupported")
+        manifests, batch_ids, absorbed, snap, dvs = self._rewrite_listing(spark)
+        if not manifests:
+            return None
+        dv_files = {f for d in dvs for f in d.get("files", [])}
+        plan = [
+            (e, base, e["name"] in dv_files or touched(e))
+            for e, base in self._listed_entries(manifests, self.root)
+        ]
+        n_dirs = len(batch_ids) + len((snap or {}).get("compacted_dirs", []))
+        if skip is not None and skip(n_dirs, sum(hit for _e, _b, hit in plan), bool(dvs)):
+            self._mark_op(op_id, rows=0)
+            return None
+        n_snap = (snap["index"] + 1) if snap else 0
+        # attempt-unique output dir (same rule as batch appends): two
+        # rewriters racing the same snapshot index write disjoint
+        # directories, and only the snapshot-CAS winner's is referenced
+        new_dir = f"compacted-{n_snap}-{uuid.uuid4().hex[:12]}"
+        out_dir = os.path.join(self.root, "data", new_dir)
+        os.makedirs(out_dir, exist_ok=True)
+        kept = [self._pointer_copy(e, base, out_dir) for e, base, hit in plan if not hit]
+        paths = [os.path.join(base, e["name"]) for e, base, hit in plan if hit]
+        if paths or inserts:
+            schema = self.schema()
+            if paths:
+                rows = spark.read.schema(schema).parquet(*paths)
+                if dvs:  # tombstoned rows must not survive into the rewrite
+                    rows = self._apply_dv(rows, self._dv_relation(spark, dvs)).select(*schema.fieldNames())
+            else:
+                rows = spark.createDataFrame([], schema)
+            if transform is not None:
+                rows = transform(rows)
+            self._materialize_rewrite(rows, new_dir, out_dir, target_files, order_by, zorder_by)
+        # stats survive the rewrite: pointer copies carry theirs, the
+        # rewritten files get their own footer bounds (new extents)
+        kept_names = {e["name"] for e in kept}
+        rewritten = sorted(
+            f for f in os.listdir(out_dir) if f.endswith(".parquet") and f not in kept_names
+        )
+        files = kept + _collect_file_stats(out_dir, rewritten, self.bloom_columns, self.sum_columns)
+        if not self._cas_snapshot(
+            n_snap,
+            [new_dir],
+            sorted(absorbed | set(batch_ids)),
+            {new_dir: files},
+            sorted(self._absorbed_dv_ids() | {d["index"] for d in dvs}),
+        ):
+            shutil.rmtree(out_dir, ignore_errors=True)
+            return None
+        self._mark_op(op_id, snapshot=n_snap)
+        return n_snap, len(rewritten), len(kept)
+
     def delete_where_pruned(self, spark: SparkSession, where: list[tuple], target_files: int = 2) -> int | None:
         """FILE-LEVEL copy-on-write DELETE: zone maps pick the candidate
         files (exactly ``visible_files(where)``); only those are read,
@@ -1337,51 +1413,21 @@ class ManifestSinkTable:
         working without re-reading footers. At 100 TB a point delete
         rewrites the handful of straddling files, not the table.
 
-        Same predicate language as ``read(where=...)``. Returns the
-        snapshot index, None when the table is empty or the CAS lost.
+        Same predicate language as ``read(where=...)``, with SQL DELETE
+        semantics: only rows whose predicate is TRUE go — a row whose
+        predicate is NULL survives, in candidate and non-candidate files
+        alike. Returns the snapshot index, None when the table is empty
+        or the CAS lost.
         """
-        import shutil
-
         from pyspark.sql import functions as F
 
-        for _c, op, _v in where:
-            if op not in _PRUNE_OPS:
-                raise ValueError(f"unsupported predicate op {op!r}; use one of {_PRUNE_OPS}")
-        # ONE listing for data AND DVs (_visible_state, ADVICE r11): the
-        # DV log is read once, before the batch markers, so a MOR commit
-        # is seen entire (tombstones + inserts) or not at all, and every
-        # live DV reference is inside the data listing (files only leave
-        # visibility via snapshots, which would make this CAS lose).
-        # Void MOR DVs repair against THIS listing (_rewrite_listing).
-        manifests, batch_ids, absorbed, snap, dvs = self._rewrite_listing(spark)
-        dv_files = {f for d in dvs for f in d.get("files", [])}
-        if not manifests:
-            return None
-        n_snap = (snap["index"] + 1) if snap else 0
-        new_dir = f"compacted-{n_snap}-{uuid.uuid4().hex[:12]}"
-        out_dir = os.path.join(self.root, "data", new_dir)
-        os.makedirs(out_dir, exist_ok=True)
-        kept_entries: list[dict] = []
-        cand_paths: list[str] = []
-        for e, base in self._listed_entries(manifests, self.root):
-            if _entry_may_match(e, where) or e["name"] in dv_files:
-                cand_paths.append(os.path.join(base, e["name"]))
-            else:
-                kept_entries.append(self._pointer_copy(e, base, out_dir))
-        if cand_paths:
-            cond = None
-            for c, op, v in where:
-                col = F.col(c)
-                this = {"==": col == v, "<": col < v, "<=": col <= v, ">": col > v, ">=": col >= v}[op]
-                cond = this if cond is None else (cond & this)
-            survivors = spark.read.schema(self.schema()).parquet(*cand_paths)
-            if dvs:  # tombstoned rows must not survive into the rewrite
-                survivors = self._apply_dv(survivors, self._dv_relation(spark, dvs)).select(
-                    *[f.name for f in self.schema().fields]
-                )
-            survivors = survivors.filter(~cond)
-            self._materialize_rewrite(survivors, new_dir, out_dir, target_files)
-        res = self._finish_rewrite(n_snap, new_dir, out_dir, kept_entries, batch_ids, absorbed, dvs)
+        doomed = F.coalesce(_where_cond(where), F.lit(False))
+        res = self._cow_rewrite(
+            spark,
+            lambda e: _entry_may_match(e, where),
+            lambda rows: rows.filter(~doomed),
+            target_files=target_files,
+        )
         return None if res is None else res[0]
 
     def compact_small_files(
@@ -1402,8 +1448,7 @@ class ManifestSinkTable:
         runs hourly.
 
         Delete-vector interplay: files referenced by visible DVs join
-        the rewrite set regardless of size (pointer copies rename,
-        which would orphan the DV's basenames), and the new snapshot
+        the rewrite set regardless of size, and the new snapshot
         absorbs those DVs — so the pass doubles as cheap tombstone
         absorption for MOR-heavy tables. File row counts come from the
         manifest; legacy entries without counts are treated as small
@@ -1415,43 +1460,14 @@ class ManifestSinkTable:
         None when there is nothing to do (≤1 small file and no pending
         DVs) or the snapshot CAS was lost.
         """
-        import shutil
-
-        if self.bucket_spec is not None and order_by:
-            raise ValueError("bucketed tables cluster by bucket_spec; order_by unsupported")
-        # ONE listing for data AND DVs, void MOR DVs repaired against it
-        # (see delete_where_pruned / _rewrite_listing)
-        manifests, batch_ids, absorbed, snap, dvs = self._rewrite_listing(spark)
-        dv_files = {f for d in dvs for f in d.get("files", [])}
-        if not manifests:
-            return None
-        n_snap = (snap["index"] + 1) if snap else 0
-        new_dir = f"compacted-{n_snap}-{uuid.uuid4().hex[:12]}"
-        out_dir = os.path.join(self.root, "data", new_dir)
-        kept_entries: list[dict] = []
-        cand_paths: list[str] = []
-        plan = self._listed_entries(manifests, self.root)
-        small_set = {
-            id(e)
-            for e, _base in plan
-            if e.get("rows") is None or e["rows"] < small_rows or e["name"] in dv_files
-        }
-        if len(small_set) <= 1 and not dvs:
-            return None  # nothing worth merging, no tombstones to absorb
-        os.makedirs(out_dir, exist_ok=True)
-        for e, base in plan:
-            if id(e) in small_set:
-                cand_paths.append(os.path.join(base, e["name"]))
-            else:
-                kept_entries.append(self._pointer_copy(e, base, out_dir))
-        if cand_paths:
-            merged = spark.read.schema(self.schema()).parquet(*cand_paths)
-            if dvs:
-                merged = self._apply_dv(merged, self._dv_relation(spark, dvs)).select(
-                    *[f.name for f in self.schema().fields]
-                )
-            self._materialize_rewrite(merged, new_dir, out_dir, target_files, order_by=order_by)
-        return self._finish_rewrite(n_snap, new_dir, out_dir, kept_entries, batch_ids, absorbed, dvs)
+        return self._cow_rewrite(
+            spark,
+            lambda e: e.get("rows") is None or e["rows"] < small_rows,
+            target_files=target_files,
+            order_by=order_by,
+            # nothing worth merging, no tombstones to absorb
+            skip=lambda _dirs, n_touched, has_dvs: n_touched <= 1 and not has_dvs,
+        )
 
     def maintenance_report(self, small_rows: int = 100_000) -> dict:
         """Manifest-only maintenance advisor — the signal an operator (or
@@ -1540,10 +1556,9 @@ class ManifestSinkTable:
     # (VERDICT r8 #4). A delete vector here is a parquet relation of
     # (file basename, row position) pairs under <root>/_deletes/, published
     # by a CAS'd commit `_commits/dv-<i>.json`. Readers anti-join visible
-    # DVs on (_metadata.file_path basename, _metadata.row_index); every
-    # rewrite (compact / merge_rows / delete_where_pruned) applies visible
-    # DVs to the data it merges and records them in the new snapshot's
-    # ``absorbed_dv_ids``.
+    # DVs on (_metadata.file_path basename, _metadata.row_index); the
+    # rewrite core (_cow_rewrite) applies visible DVs to the data it
+    # merges and records them in the new snapshot's ``absorbed_dv_ids``.
     #
     # Concurrency protocol (no lost updates, pure CAS): a DV computed
     # against snapshot s is valid only while no REAL snapshot s+1 rewrites
@@ -1644,17 +1659,14 @@ class ManifestSinkTable:
 
     def _create_barrier_snapshot(self, prior: dict | None) -> bool:
         """CAS a content-identical barrier at the next snapshot index."""
-        n = (prior["index"] + 1) if prior else 0
-        payload = {
-            "index": n,
-            "compacted_dirs": list((prior or {}).get("compacted_dirs", [])),
-            "absorbed_batch_ids": list((prior or {}).get("absorbed_batch_ids", [])),
-            "files": (prior or {}).get("files", {}),
-            "absorbed_dv_ids": list((prior or {}).get("absorbed_dv_ids", [])),
-            "barrier": True,
-        }
-        return self._atomic_create(
-            os.path.join(self.root, "_commits", f"snapshot-{n}.json"), json.dumps(payload)
+        prior = prior or {}
+        return self._cas_snapshot(
+            (prior["index"] + 1) if prior else 0,
+            list(prior.get("compacted_dirs", [])),
+            list(prior.get("absorbed_batch_ids", [])),
+            prior.get("files", {}),
+            list(prior.get("absorbed_dv_ids", [])),
+            barrier=True,
         )
 
     def delete_where_dv(
@@ -1676,9 +1688,7 @@ class ManifestSinkTable:
         one anti-join against the (small) DV relation until compaction
         absorbs it; ``compact()`` restores the zero-join read path.
         """
-        for _c, op, _v in where:
-            if op not in _PRUNE_OPS:
-                raise ValueError(f"unsupported predicate op {op!r}; use one of {_PRUNE_OPS}")
+        cond = _where_cond(where)
         marker = os.path.join(self.root, "_commits", f"dvop-{op_id}.marker") if op_id else None
         if marker and os.path.exists(marker):
             return None
@@ -1693,11 +1703,6 @@ class ManifestSinkTable:
                 if marker:
                     self._atomic_create(marker, json.dumps({"op_id": op_id, "rows": 0}))
                 return None
-            cond = None
-            for c, op, v in where:
-                col = F.col(c)
-                this = {"==": col == v, "<": col < v, "<=": col <= v, ">": col > v, ">=": col >= v}[op]
-                cond = this if cond is None else (cond & this)
             hits = (
                 spark.read.schema(self.schema()).parquet(*cand)
                 .withColumn("file", F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1))
@@ -1985,42 +1990,6 @@ class ManifestSinkTable:
             out = part if out is None else out.unionByName(part)
         return out
 
-    def merge_rows(
-        self,
-        spark: SparkSession,
-        updates: DataFrame,
-        keys: list[str],
-        target_files: int = 4,
-        order_by: list[str] | None = None,
-    ) -> int | None:
-        """Keyed MERGE/upsert via copy-on-write: rows of ``updates``
-        REPLACE current rows sharing their key; unmatched update keys
-        insert. The SQL MERGE WHEN MATCHED UPDATE / WHEN NOT MATCHED
-        INSERT shape (whole-row updates), materialized as one atomic
-        snapshot. ``updates`` must carry the table schema; duplicate
-        keys WITHIN updates are rejected (ambiguous merge source, the
-        standard MERGE error)."""
-        from pyspark.sql import Window
-        from pyspark.sql import functions as F
-
-        dup = updates.groupBy(*keys).count().filter(F.col("count") > 1)
-        if not dup.isEmpty():
-            raise ValueError("merge_rows: updates contain duplicate keys (ambiguous merge source)")
-        cols = [f.name for f in self.schema().fields]
-
-        def _merge(df: DataFrame) -> DataFrame:
-            tagged = df.select(*cols).withColumn("_prec", F.lit(0)).unionByName(
-                updates.select(*cols).withColumn("_prec", F.lit(1))
-            )
-            w = Window.partitionBy(*keys).orderBy(F.col("_prec").desc())
-            return (
-                tagged.withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") == 1)
-                .drop("_prec", "_rn")
-            )
-
-        return self.rewrite(spark, _merge, target_files=target_files, order_by=order_by)
-
     def _plan_key_touched(
         self,
         updates: DataFrame,
@@ -2177,18 +2146,24 @@ class ManifestSinkTable:
         op_id: str | None = None,
         delete: bool = False,
     ) -> tuple[int, int, int] | None:
-        """FILE-LEVEL copy-on-write MERGE (VERDICT r9 #1): same semantics
-        as ``merge_rows`` — update rows REPLACE current rows sharing
-        their key, unmatched keys insert (or, with ``delete=True``,
-        matched keys are REMOVED and unmatched keys ignored: the keyed
-        DELETE a CDC consumer needs) — but only the files whose
-        zone-maps/blooms admit at least one update key are read and
-        rewritten; every other visible file is carried into the new
-        snapshot by pointer copy with its stats, exactly the
-        ``delete_where_pruned`` mechanic. At 100 TB a CDC micro-batch
+        """FILE-LEVEL copy-on-write keyed MERGE (VERDICT r9 #1): rows of
+        ``updates`` REPLACE current rows sharing their key and unmatched
+        keys insert — the SQL MERGE WHEN MATCHED UPDATE / WHEN NOT
+        MATCHED INSERT shape (whole-row updates) as one atomic snapshot.
+        With ``delete=True`` matched keys are REMOVED and unmatched keys
+        ignored: the keyed DELETE a CDC consumer needs. Key matching is
+        ``_key_match``'s everywhere: a NULL key component matches NULL,
+        for the upsert window and the keyed delete alike. ``updates``
+        must carry the table schema; duplicate keys WITHIN an upsert's
+        updates are rejected (ambiguous merge source, the standard MERGE
+        error); a keyed delete tolerates them.
+
+        Only the files whose zone-maps/blooms admit at least one update
+        key are read and rewritten (``_plan_key_touched``); every other
+        visible file is carried into the new snapshot by pointer copy
+        with its stats (``_cow_rewrite``). At 100 TB a CDC micro-batch
         touching one key range rewrites the straddling files, not the
-        table — write amplification is O(touched files), where
-        ``merge_rows`` is O(table) per batch.
+        table — write amplification is O(touched files).
 
         Why pruning is sound: a row with key k can live in file f only
         if EVERY key column of k lies inside f's min/max bounds and
@@ -2197,8 +2172,7 @@ class ManifestSinkTable:
         pointer-copying it preserves MERGE semantics; matched rows all
         live in touched files, and insert keys land in the rewritten
         output. Files without stats (legacy markers) and files
-        referenced by visible delete vectors are always rewritten
-        (pointer copies rename, which would orphan a DV's basenames).
+        referenced by visible delete vectors are always rewritten.
 
         The update keys are collected to the driver for the per-file
         test — the planning metadata pass every MERGE engine does
@@ -2208,22 +2182,18 @@ class ManifestSinkTable:
         pre-checkpointed, as the ingest pipeline does): its keys are
         collected once and its rows re-read for the rewrite.
 
-        Concurrency/replay: one manifest listing drives data, absorbed
-        batches and absorbed DVs; the snapshot CAS races compactions
-        and barrier snapshots exactly like ``rewrite`` (on a loss the
-        output dir is removed and None returned — retry on the fresh
-        state). ``op_id`` gives replay idempotence via a CAS'd
+        Concurrency/replay: the snapshot CAS races compactions and
+        barrier snapshots like every ``_cow_rewrite`` caller (on a loss
+        the output dir is removed and None returned — retry on the
+        fresh state). ``op_id`` gives replay idempotence via a CAS'd
         ``mrgop-<op_id>.marker``. Returns
         ``(snapshot_index, n_rewritten_files, n_pointer_copied_files)``
         or None (empty table, no-op delete, replayed op_id, lost CAS).
         """
-        import shutil
-
         from pyspark.sql import Window
         from pyspark.sql import functions as F
 
-        marker = os.path.join(self.root, "_commits", f"mrgop-{op_id}.marker") if op_id else None
-        if marker and os.path.exists(marker):
+        if op_id and os.path.exists(self._op_marker(op_id)):
             return None
         schema = self.schema()
         if schema is None:
@@ -2243,68 +2213,46 @@ class ManifestSinkTable:
             # table schema)
             self._evolve_schema(updates)
             schema = self.schema()
-        cols = [f.name for f in schema.fields]
+        cols = schema.fieldNames()
 
-        _touched = self._plan_key_touched(
+        touched = self._plan_key_touched(
             updates,
             keys,
             max_distinct_keys,
             # keyed DELETE tolerates duplicate keys (same row set removed)
             dup_error=None if delete else "merge_rows_pruned: updates contain duplicate keys (ambiguous merge source)",
         )
-        if _touched is None:  # no update keys
-            if marker:
-                self._atomic_create(marker, json.dumps({"op_id": op_id, "rows": 0}))
+        if touched is None:  # no update keys
+            self._mark_op(op_id, rows=0)
             return None
 
-        # ONE listing for data AND DVs, void MOR DVs repaired against it
-        # (see delete_where_pruned / _rewrite_listing)
-        manifests, batch_ids, absorbed, snap, dvs = self._rewrite_listing(spark)
-        dv_files = {f for d in dvs for f in d.get("files", [])}
-        if not manifests:
-            return None
-        n_snap = (snap["index"] + 1) if snap else 0
-        new_dir = f"compacted-{n_snap}-{uuid.uuid4().hex[:12]}"
-        out_dir = os.path.join(self.root, "data", new_dir)
-        os.makedirs(out_dir, exist_ok=True)
-        kept_entries: list[dict] = []
-        cand_paths: list[str] = []
-        for e, base in self._listed_entries(manifests, self.root):
-            if _touched(e) or e["name"] in dv_files:
-                cand_paths.append(os.path.join(base, e["name"]))
-            else:
-                kept_entries.append(self._pointer_copy(e, base, out_dir))
-        if delete and not cand_paths:
-            # no visible file can hold any delete key: whole op is a no-op
-            shutil.rmtree(out_dir, ignore_errors=True)
-            if marker:
-                self._atomic_create(marker, json.dumps({"op_id": op_id, "rows": 0}))
-            return None
-        if cand_paths:
-            touched = spark.read.schema(schema).parquet(*cand_paths)
-            if dvs:  # tombstoned rows must not survive into the rewrite
-                touched = self._apply_dv(touched, self._dv_relation(spark, dvs)).select(*cols)
-        else:
-            touched = spark.createDataFrame([], schema)
         if delete:
-            rewritten_df = touched.join(updates.select(*keys).distinct(), keys, "left_anti").select(*cols)
+            upd_keys, match = _key_match(updates, keys)
+
+            def _merge(rows: DataFrame) -> DataFrame:
+                return rows.join(upd_keys, match, "left_anti").select(*cols)
         else:
-            tagged = touched.select(*cols).withColumn("_prec", F.lit(0)).unionByName(
-                updates.select(*cols).withColumn("_prec", F.lit(1))
-            )
-            w = Window.partitionBy(*keys).orderBy(F.col("_prec").desc())
-            rewritten_df = (
-                tagged.withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") == 1)
-                .drop("_prec", "_rn")
-            )
-        self._materialize_rewrite(rewritten_df, new_dir, out_dir, target_files)
-        res = self._finish_rewrite(n_snap, new_dir, out_dir, kept_entries, batch_ids, absorbed, dvs)
-        if res is None:
-            return None
-        if marker:
-            self._atomic_create(marker, json.dumps({"op_id": op_id, "snapshot": n_snap}))
-        return res
+            def _merge(rows: DataFrame) -> DataFrame:
+                tagged = rows.select(*cols).withColumn("_prec", F.lit(0)).unionByName(
+                    updates.select(*cols).withColumn("_prec", F.lit(1))
+                )
+                w = Window.partitionBy(*keys).orderBy(F.col("_prec").desc())
+                return (
+                    tagged.withColumn("_rn", F.row_number().over(w))
+                    .filter(F.col("_rn") == 1)
+                    .drop("_prec", "_rn")
+                )
+
+        return self._cow_rewrite(
+            spark,
+            touched,
+            _merge,
+            target_files=target_files,
+            # no visible file can hold any delete key: the op is a no-op
+            skip=(lambda _dirs, n_touched, _dvs: n_touched == 0) if delete else None,
+            inserts=not delete,
+            op_id=op_id,
+        )
 
     def upsert_mor(
         self,
@@ -2718,101 +2666,6 @@ class ManifestSinkTable:
                 "— retry this maintenance pass before escalating"
             )
 
-    def _rewrite_visible(self, spark, fn, target_files, order_by, require_multiple, zorder_by=None):
-        if order_by and zorder_by:
-            raise ValueError("pass order_by or zorder_by, not both")
-        if self.bucket_spec is not None and (order_by or zorder_by):
-            # bucketed tables cluster by their bucket spec — a competing
-            # order would silently destroy the co-located-join layout
-            raise ValueError("bucketed tables cluster by bucket_spec; order_by/zorder_by unsupported")
-        # ONE listing for data AND DVs, void MOR DVs repaired against it
-        # (see delete_where_pruned / _rewrite_listing); drives the no-op
-        # decision and the apply/absorb set below
-        manifests, batch_ids, absorbed, snap, dvs = self._rewrite_listing(spark)
-        prior_dirs = list((snap or {}).get("compacted_dirs", []))
-        # a single data dir normally needs no compaction — unless delete
-        # vectors are pending, whose absorption is itself the point
-        if require_multiple and len(batch_ids) + len(prior_dirs) <= 1 and not dvs:
-            return None
-        if len(batch_ids) + len(prior_dirs) == 0:
-            return None
-        n_snap = (snap["index"] + 1) if snap else 0
-        # attempt-unique output dir (same rule as batch appends): two
-        # compactors racing the same snapshot index write disjoint
-        # directories, and only the snapshot-CAS winner's is referenced
-        new_dir = f"compacted-{n_snap}-{uuid.uuid4().hex[:12]}"
-        # Merge exactly the ONE listing captured above — NOT self.read(),
-        # which would re-list committed ids: a batch committed concurrently
-        # between two listings would be merged into the compacted dir yet
-        # missing from absorbed_batch_ids, double-counting its rows after
-        # the snapshot (_visible_state makes the data and absorbed sets one
-        # read).
-        paths = [os.path.join(self.root, "data", m["dir"]) for m in manifests]
-        merged = spark.read.schema(self.schema()).parquet(*paths)
-        # apply-and-absorb the DVs from the pre-data listing: without
-        # this, the rewrite would resurrect tombstoned rows into the new
-        # snapshot. A DV committed after that listing stays visible and
-        # guards itself via the barrier-snapshot protocol.
-        if dvs:
-            merged = self._apply_dv(merged, self._dv_relation(spark, dvs)).select(
-                *[f.name for f in self.schema().fields]
-            )
-        absorbed_dv = sorted(self._absorbed_dv_ids() | {d["index"] for d in dvs})
-        if fn is not None:
-            merged = fn(merged)
-            if [f.name for f in merged.schema.fields] != [f.name for f in self.schema().fields]:
-                raise ValueError("rewrite transform must preserve the table schema")
-        out_dir = os.path.join(self.root, "data", new_dir)
-        if self.bucket_spec is not None:
-            # compaction merges each bucket's files back into one per
-            # bucket; the sortBy keeps in-file key order (order guard at
-            # the top of this method)
-            self._write_datafiles(merged, out_dir)
-        elif zorder_by:
-            from pyspark.sql import functions as F
-
-            row = merged.agg(
-                *[F.min(F.col(c).cast("double")).alias(f"mn_{i}") for i, c in enumerate(zorder_by)],
-                *[F.max(F.col(c).cast("double")).alias(f"mx_{i}") for i, c in enumerate(zorder_by)],
-            ).first()
-            bounds = {c: (row[f"mn_{i}"], row[f"mx_{i}"]) for i, c in enumerate(zorder_by)}
-            merged = (
-                merged.withColumn("__z", _zorder_expr(zorder_by, bounds))
-                .repartitionByRange(target_files, "__z")
-                .sortWithinPartitions("__z")
-                .drop("__z")
-            )
-            merged.write.mode("overwrite").parquet(out_dir)
-        elif order_by:
-            merged = merged.repartitionByRange(target_files, *order_by).sortWithinPartitions(*order_by)
-            merged.write.mode("overwrite").parquet(out_dir)
-        else:
-            merged.coalesce(target_files).write.mode("overwrite").parquet(out_dir)
-        # stats survive compaction: the snapshot carries the merged files'
-        # own footer bounds (recomputed — merged files have new extents)
-        out_files = sorted(f for f in os.listdir(out_dir) if f.endswith(".parquet"))
-        created = self._atomic_create(
-            os.path.join(self.root, "_commits", f"snapshot-{n_snap}.json"),
-            json.dumps(
-                {
-                    "index": n_snap,
-                    "compacted_dirs": [new_dir],
-                    "absorbed_batch_ids": sorted(absorbed | set(batch_ids)),
-                    "files": {new_dir: _collect_file_stats(out_dir, out_files, self.bloom_columns, self.sum_columns)},
-                    "absorbed_dv_ids": absorbed_dv,
-                }
-            ),
-        )
-        if not created:
-            # a concurrent compactor won the snapshot CAS; this attempt's
-            # output directory is unreferenced garbage — remove it rather
-            # than leave it for vacuum, and report nothing compacted
-            import shutil
-
-            shutil.rmtree(os.path.join(self.root, "data", new_dir), ignore_errors=True)
-            return None
-        return n_snap
-
     def _registered_consumers(self) -> list[dict]:
         """Change-feed consumer registrations under <root>/_consumers/
         (written by ``ChangeFeedConsumer``): each carries the consumer's
@@ -3098,10 +2951,7 @@ class ManifestSinkTable:
         (residual-only)."""
         if (epoch is None) == (batch_id is None):
             raise ValueError("pass exactly one of epoch= (pending) or batch_id= (committed)")
-        if where is not None:
-            for _, op, _v in where:
-                if op not in _PRUNE_OPS:
-                    raise ValueError(f"unsupported predicate op {op!r}; use one of {_PRUNE_OPS}")
+        _check_ops(where)
         commits = os.path.join(self.root, "_commits")
         manifests: dict[int, dict] = {}
         published_at: dict[int, int] = {}  # staged dv index -> publishing epoch
@@ -3130,15 +2980,7 @@ class ManifestSinkTable:
         missing = [p for p in dir_paths if not os.path.exists(p)]
         if missing:
             raise ValueError(f"time travel target was vacuumed: {sorted(missing)[:3]}")
-        paths: list[str] = []
-        for _, m in sorted(manifests.items()):
-            base = os.path.join(self.root, "data", m["dir"])
-            files = m["files"]
-            if files is None:  # no stats recorded: keep everything
-                files = [{"name": f, "stats": {}} for f in sorted(os.listdir(base)) if f.endswith(".parquet")]
-            for e in files:
-                if _entry_may_match(e, where):
-                    paths.append(os.path.join(base, e["name"]))
+        paths = self._prune_paths([m for _, m in sorted(manifests.items())], where)
         if not dir_paths:
             if schema is None:
                 raise ValueError(f"sink table at {self.root} has never been written")
@@ -3210,7 +3052,7 @@ class ManifestSinkTable:
 
         Without ``key_cols``: bag-semantics diff — ``insert`` rows are
         ``current EXCEPT ALL old``, ``delete`` rows the reverse. With
-        ``key_cols`` (unique per state, enforced like merge_rows): a key
+        ``key_cols`` (unique per state, enforced like merge_rows_pruned): a key
         present in both states with different non-key values emits an
         ``update_pre``/``update_post`` row pair (the CDF vocabulary);
         key-only presence classifies ``insert``/``delete``.
@@ -3388,20 +3230,12 @@ class ManifestSinkTable:
         return self._prune_paths(manifests, where), dvs
 
     def _prune_paths(self, manifests: list[dict], where: list[tuple] | None) -> list[str]:
-        if where is not None:
-            for _, op, _v in where:
-                if op not in _PRUNE_OPS:
-                    raise ValueError(f"unsupported predicate op {op!r}; use one of {_PRUNE_OPS}")
-        paths: list[str] = []
-        for m in manifests:
-            base = os.path.join(self.root, "data", m["dir"])
-            entries = m["files"]
-            if entries is None:  # legacy layout: list, keep everything
-                entries = [{"name": f, "stats": {}} for f in sorted(os.listdir(base)) if f.endswith(".parquet")]
-            for e in entries:
-                if _entry_may_match(e, where):
-                    paths.append(os.path.join(base, e["name"]))
-        return paths
+        _check_ops(where)
+        return [
+            os.path.join(base, e["name"])
+            for e, base in self._listed_entries(manifests, self.root)
+            if _entry_may_match(e, where)
+        ]
 
     def visible_files(self, where: list[tuple] | None = None) -> list[str]:
         """Absolute paths of the parquet files a read must open, after

@@ -298,3 +298,22 @@ def test_vanished_batch_raises_instead_of_silent_skip(spark, tmp_path, monkeypat
     monkeypatch.undo()
     assert c.poll(spark) == 1
     assert _content(tgt, spark) == [(1, "a")]
+
+
+def test_helper_column_collision_raises(spark, tmp_path):
+    """ADVICE r15: the run merge tags rows with ``_cdf_bid``/``_cdf_max``;
+    a source carrying a column of either name must fail loudly, naming
+    it, instead of having its values silently overwritten."""
+    import pytest as _pytest
+
+    for helper in ("_cdf_bid", "_cdf_max"):
+        src = _mk(spark, tmp_path, f"src{helper}")
+        schema = f"k long, {helper} long"
+        src.write_batch(spark.createDataFrame([(1, 10), (2, 20)], schema).coalesce(1), 0)
+        upd = spark.createDataFrame([(1, 11)], schema).localCheckpoint(eager=True)
+        src.log_changes(upd, 1, change_type="upsert")
+        assert src.merge_rows_pruned(spark, upd, keys=["k"]) is not None
+        tgt = _mk(spark, tmp_path, f"tgt{helper}")
+        c = ChangeFeedConsumer(src, tgt, keys=["k"], checkpoint_dir=str(tmp_path / f"ckpt{helper}"))
+        with _pytest.raises(ValueError, match=helper):
+            c.run_available_now(spark)

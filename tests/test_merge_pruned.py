@@ -1,6 +1,8 @@
 """File-level copy-on-write MERGE (VERDICT r9 #1).
 
-merge_rows_pruned must (a) keep exactly merge_rows' semantics, (b) rewrite
+merge_rows_pruned must (a) keep exact MERGE semantics — last writer wins
+per key, NULL keys match NULL — checked against an independent Python
+model, (b) rewrite
 ONLY the files whose zone-maps/blooms admit an update key — pointer-copying
 the rest — and (c) compose with delete vectors, time travel, the change
 feed, and replay idempotence like every other sink write path.
@@ -32,15 +34,28 @@ def _content(sink, spark):
     return sorted((r["k"], r["v"]) for r in sink.read(spark).collect())
 
 
+def _nullsafe_sorted(rows):
+    return sorted(rows, key=lambda t: (t[0] is None, t[0] if t[0] is not None else 0, t[1]))
+
+
+def _lww(*row_sets):
+    """Independent MERGE model: apply each (k, v) row set in order, last
+    writer wins per key; a Python dict keys None as ONE key, which is
+    exactly the NULL-matches-NULL merge rule."""
+    state = {}
+    for rows in row_sets:
+        state.update(dict(rows))
+    return _nullsafe_sorted(state.items())
+
+
 def test_pruned_merge_matches_merge_rows_semantics(spark, tmp_path):
-    """Same inputs through merge_rows and merge_rows_pruned -> identical
-    table content (updates replace, unmatched keys insert)."""
-    a = _ranged_sink(spark, tmp_path / "a")
-    b = _ranged_sink(spark, tmp_path / "b")
-    updates = _kv(spark, [(5, "U"), (150, "U"), (9_999, "NEW")])
-    assert a.merge_rows(spark, updates, keys=["k"]) is not None
-    assert b.merge_rows_pruned(spark, updates, keys=["k"]) is not None
-    assert _content(a, spark) == _content(b, spark)
+    """merge_rows_pruned content == the last-writer-wins model (updates
+    replace, unmatched keys insert)."""
+    sink = _ranged_sink(spark, tmp_path)
+    base = _content(sink, spark)
+    rows = [(5, "U"), (150, "U"), (9_999, "NEW")]
+    assert sink.merge_rows_pruned(spark, _kv(spark, rows), keys=["k"]) is not None
+    assert _content(sink, spark) == _lww(base, rows)
 
 
 def test_pruned_merge_rewrites_only_intersecting_files(spark, tmp_path):
@@ -194,33 +209,45 @@ def test_pruned_merge_then_second_merge_composes(spark, tmp_path):
 
 
 def _content_nullsafe(sink, spark):
-    rows = [(r["k"], r["v"]) for r in sink.read(spark).collect()]
-    return sorted(rows, key=lambda t: (t[0] is None, t[0] if t[0] is not None else 0, t[1]))
+    return _nullsafe_sorted((r["k"], r["v"]) for r in sink.read(spark).collect())
 
 
 def test_pruned_merge_null_keys_match_merge_rows(spark, tmp_path):
     """Null-keyed updates must not crash the driver planning pass and
-    must keep merge_rows' window semantics (NULL key matches NULL key);
-    a null-free, out-of-range file is still pointer-copied."""
-    layouts = []
-    for name in ("a", "b"):
-        s = ManifestSinkTable(str(tmp_path / name), write_mode="committed")
-        s.write_batch(_kv(spark, [(i, "a") for i in range(100)]).coalesce(1), 0)
-        s.write_batch(_kv(spark, [(i, "b") for i in range(100, 200)]).coalesce(1), 1)
-        s.write_batch(
-            _kv(spark, [(None, "n")] + [(i, "c") for i in range(200, 300)]).coalesce(1), 2
-        )
-        layouts.append(s)
-    pruned, twin = layouts
-    updates = _kv(spark, [(None, "U"), (5, "U")])
-    res = pruned.merge_rows_pruned(spark, updates, keys=["k"], target_files=1)
+    must keep the window semantics (NULL key matches NULL key) of the
+    last-writer-wins model; a null-free, out-of-range file is still
+    pointer-copied."""
+    pruned = ManifestSinkTable(str(tmp_path / "a"), write_mode="committed")
+    base = [
+        [(i, "a") for i in range(100)],
+        [(i, "b") for i in range(100, 200)],
+        [(None, "n")] + [(i, "c") for i in range(200, 300)],
+    ]
+    for b, rows in enumerate(base):
+        pruned.write_batch(_kv(spark, rows).coalesce(1), b)
+    rows = [(None, "U"), (5, "U")]
+    res = pruned.merge_rows_pruned(spark, _kv(spark, rows), keys=["k"], target_files=1)
     assert res is not None
     # batch 1 (keys 100-199, no nulls, out of update range) stays a pointer copy
     assert res[2] == 1, res
-    assert twin.merge_rows(spark, updates, keys=["k"]) is not None
     got = _content_nullsafe(pruned, spark)
-    assert got == _content_nullsafe(twin, spark)
+    assert got == _lww(*base, rows)
     assert (None, "U") in got and (5, "U") in got and len(got) == 301
+
+
+def test_keyed_delete_matches_null_keys(spark, tmp_path):
+    """The keyed DELETE uses the merge's NULL-key rule (``_key_match``):
+    a NULL-keyed row upserted by one merge is removed by a keyed delete
+    of the NULL key — a CDC mirror must not keep rows its source
+    deleted. Non-NULL keys outside the delete set survive."""
+    sink = _ranged_sink(spark, tmp_path, n_batches=2)
+    base = _content(sink, spark)
+    assert sink.merge_rows_pruned(spark, _kv(spark, [(None, "U"), (7, "U")]), keys=["k"]) is not None
+    assert (None, "U") in _content_nullsafe(sink, spark)
+    dels = spark.createDataFrame([(None,), (8,)], "k long")
+    assert sink.merge_rows_pruned(spark, dels, keys=["k"], delete=True) is not None
+    want = [(k, v) for k, v in _lww(base, [(7, "U")]) if k != 8]
+    assert _content_nullsafe(sink, spark) == want
 
 
 def test_pruned_merge_all_null_update_keys_on_null_free_table(spark, tmp_path):

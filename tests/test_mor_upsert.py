@@ -1,6 +1,7 @@
 """Merge-on-read keyed upserts (VERDICT r10 #2).
 
-``upsert_mor`` must (a) keep exactly merge_rows' semantics, (b) be
+``upsert_mor`` must (a) keep exact MERGE semantics (last writer wins per
+key, checked against an independent Python model), (b) be
 APPEND-ONLY per micro-batch — no visible data file is rewritten or
 renamed; superseded row versions die by tombstone — and (c) compose with
 compaction, time travel, the change feed, delete vectors and replay
@@ -34,15 +35,15 @@ def _content(sink, spark):
 
 
 def test_mor_matches_merge_rows_semantics(spark, tmp_path):
-    """Same inputs through merge_rows (whole-table COW) and upsert_mor ->
-    identical visible content."""
-    a = _ranged_sink(spark, tmp_path / "a")
-    b = _ranged_sink(spark, tmp_path / "b")
-    updates = _kv(spark, [(5, "U"), (150, "U"), (399, "U"), (1000, "NEW"), (2000, "NEW")])
-    assert a.merge_rows(spark, updates, keys=["k"]) is not None
-    res = b.upsert_mor(spark, updates, keys=["k"], batch_id=10)
+    """upsert_mor's visible content == the last-writer-wins model
+    (updates replace, unmatched keys insert)."""
+    sink = _ranged_sink(spark, tmp_path)
+    model = dict(_content(sink, spark))
+    rows = [(5, "U"), (150, "U"), (399, "U"), (1000, "NEW"), (2000, "NEW")]
+    res = sink.upsert_mor(spark, _kv(spark, rows), keys=["k"], batch_id=10)
     assert res is not None and res[1] == 3  # three matched keys tombstoned
-    assert _content(a, spark) == _content(b, spark)
+    model.update(rows)
+    assert _content(sink, spark) == sorted(model.items())
 
 
 def test_mor_is_append_only(spark, tmp_path):

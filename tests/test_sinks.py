@@ -645,7 +645,7 @@ def test_rewrite_delete_where(spark, tmp_path):
     for b in range(3):
         sink.write_batch(spark.range(b * 100, (b + 1) * 100).selectExpr("id AS k", "id * 2 AS v").coalesce(2), b)
     assert sink.read(spark).count() == 300
-    snap = sink.delete_where(spark, [("k", ">=", 100), ("k", "<", 200)], order_by=["k"])
+    snap = sink.delete_where_pruned(spark, [("k", ">=", 100), ("k", "<", 200)])
     assert snap is not None
     assert sink.read(spark).count() == 200
     assert sink.read(spark).filter("k >= 100 AND k < 200").count() == 0
@@ -654,7 +654,7 @@ def test_rewrite_delete_where(spark, tmp_path):
     # absorbed batch ids stay idempotent
     assert sink.write_batch(spark.range(2).selectExpr("id AS k", "id AS v"), 1).already_exists
     # deleting everything leaves an empty (but readable) table
-    sink.delete_where(spark, [("k", ">=", 0)])
+    sink.delete_where_pruned(spark, [("k", ">=", 0)])
     assert sink.read(spark).count() == 0
 
 
@@ -667,32 +667,21 @@ def test_rewrite_merge_rows_upsert(spark, tmp_path):
     sink.write_batch(spark.range(10).selectExpr("id AS k", "cast(id * 10 as long) AS v").coalesce(1), 0)
     sink.write_batch(spark.range(10, 20).selectExpr("id AS k", "cast(id * 10 as long) AS v").coalesce(1), 1)
     updates = spark.createDataFrame([(5, 999), (15, 888), (40, 777)], "k long, v long")
-    assert sink.merge_rows(spark, updates, keys=["k"]) is not None
+    assert sink.merge_rows_pruned(spark, updates, keys=["k"]) is not None
     got = {r["k"]: r["v"] for r in sink.read(spark).collect()}
     assert len(got) == 21  # 20 original keys + 1 inserted
     assert got[5] == 999 and got[15] == 888 and got[40] == 777
     assert got[6] == 60  # untouched rows preserved
     dup = spark.createDataFrame([(1, 1), (1, 2)], "k long, v long")
     with _pytest.raises(ValueError, match="duplicate keys"):
-        sink.merge_rows(spark, dup, keys=["k"])
-    # schema-breaking transform rejected
-    with _pytest.raises(ValueError, match="preserve the table schema"):
-        sink.rewrite(spark, lambda df: df.drop("v"))
-
-
-def test_rewrite_single_batch_allowed_but_compact_still_requires_multiple(spark, kv_df, tmp_path):
-    sink = ManifestSinkTable(str(tmp_path / "t"), write_mode="committed")
-    sink.write_batch(kv_df, 0)
-    assert sink.compact(spark) is None  # unchanged compact contract
-    assert sink.rewrite(spark, lambda df: df.filter("int_value >= 0")) == 0
-    assert sink.read(spark).count() == 2
+        sink.merge_rows_pruned(spark, dup, keys=["k"])
 
 
 def test_delete_where_pruned_rewrites_only_candidate_files(spark, tmp_path):
     """File-level COW delete: zone maps pick the straddling files; every
     other file is carried by hardlink (pointer copy) with its stats —
-    verified by inode identity, rewritten-file count, answer equality
-    with the whole-table delete, and skipping still working afterward."""
+    verified by inode identity, rewritten-file count, the surviving row
+    count, and skipping still working afterward."""
     import os
 
     sink = ManifestSinkTable(str(tmp_path / "t"), write_mode="committed")
@@ -732,6 +721,25 @@ def test_delete_where_pruned_rewrites_only_candidate_files(spark, tmp_path):
     assert sink.delete_where_pruned(spark, [("k", "==", 700)]) is not None
     assert sink.read(spark).filter("k = 700").count() == 0
     assert sink.read(spark).count() == 800 - 20 - 1
+
+
+def test_delete_where_pruned_keeps_null_predicate_rows(spark, tmp_path):
+    """SQL DELETE removes only rows whose predicate is TRUE: a NULL ``k``
+    makes ``k < 5`` NULL, so NULL-keyed rows survive — in the candidate
+    file that is rewritten and in the non-candidate file that is
+    pointer-copied alike."""
+    sink = ManifestSinkTable(str(tmp_path / "t"), write_mode="committed")
+    sink.write_batch(
+        spark.createDataFrame([(None, "cand")] + [(k, "a") for k in range(10)], "k long, v string").coalesce(1), 0
+    )
+    sink.write_batch(
+        spark.createDataFrame([(None, "kept")] + [(k, "b") for k in range(100, 110)], "k long, v string").coalesce(1), 1
+    )
+    assert len(sink.visible_files([("k", "<", 5)])) == 1  # only batch 0 is a candidate
+    assert sink.delete_where_pruned(spark, [("k", "<", 5)]) is not None
+    rows = sink.read(spark).collect()
+    assert sorted(r["v"] for r in rows if r["k"] is None) == ["cand", "kept"]
+    assert sorted(r["k"] for r in rows if r["k"] is not None) == [*range(5, 10), *range(100, 110)]
 
 
 def test_bloom_skipping_prunes_scattered_keys(spark, tmp_path):
@@ -1075,7 +1083,7 @@ def test_dv_merge_rows_does_not_resurrect(spark, tmp_path):
     sink = _dv_table(spark, tmp_path)
     sink.delete_where_dv(spark, [("k", "==", 42)])
     upd = spark.createDataFrame([(43, 9999)], "k long, v long")
-    assert sink.merge_rows(spark, upd, keys=["k"]) is not None
+    assert sink.merge_rows_pruned(spark, upd, keys=["k"]) is not None
     rows = {r["k"]: r["v"] for r in sink.read(spark).collect()}
     assert 42 not in rows and rows[43] == 9999 and len(rows) == 399
     assert sink.visible_dvs() == []
@@ -1200,7 +1208,7 @@ def test_change_feed_inserts_upserts_and_replay(spark, tmp_path):
     sink.write_batch(spark.createDataFrame([(3, 30)], "k long, v long").coalesce(1), 1)
     upd = spark.createDataFrame([(2, 99), (4, 40)], "k long, v long").coalesce(1)
     assert sink.log_changes(upd, 2)
-    assert sink.merge_rows(spark, upd, keys=["k"]) is not None
+    assert sink.merge_rows_pruned(spark, upd, keys=["k"]) is not None
     assert not sink.log_changes(upd, 2)  # replay: no duplicate log
 
     feed = sink.changes(spark).orderBy("_change_batch_id", "k").collect()
@@ -1221,7 +1229,7 @@ def test_change_feed_inserts_upserts_and_replay(spark, tmp_path):
         if copy.schema() is None or not copy.committed_ids() and not copy._latest_snapshot():
             copy.write_batch(rows, b)
         else:
-            copy.merge_rows(spark, rows, keys=["k"])
+            copy.merge_rows_pruned(spark, rows, keys=["k"])
     a = sorted(tuple(r) for r in sink.read(spark).collect())
     bb = sorted(tuple(r) for r in copy.read(spark).collect())
     assert a == bb == [(1, 10), (2, 99), (3, 30), (4, 40)]
@@ -1330,7 +1338,7 @@ def test_diff_keyed_classifies_insert_delete_update(spark, tmp_path):
     sink.write_batch(_kv(spark, [(1, "a"), (2, "b"), (3, "c")]).coalesce(1), 0)
     # anchor = batch 0; then: insert 4, delete 3 (DV), update 2
     sink.write_batch(_kv(spark, [(4, "d")]).coalesce(1), 1)
-    assert sink.merge_rows(spark, _kv(spark, [(2, "B")]), keys=["k"]) is not None
+    assert sink.merge_rows_pruned(spark, _kv(spark, [(2, "B")]), keys=["k"]) is not None
     assert sink.delete_where_dv(spark, [("k", "==", 3)]) is not None
     d = sink.diff(spark, from_batch_id=0, key_cols=["k"])
     got = {(r["change_type"], r["k"], r["v"]) for r in d.collect()}
@@ -1388,7 +1396,7 @@ def test_dv_after_full_rewrite_orders_after_absorbed_batches(spark, tmp_path):
     sink = ManifestSinkTable(str(tmp_path / "t"), write_mode="committed")
     for b in range(2):
         sink.write_batch(_kv(spark, [(b * 10, "a"), (b * 10 + 1, "b")]).coalesce(1), b)
-    assert sink.merge_rows(spark, _kv(spark, [(0, "A")]), keys=["k"]) is not None
+    assert sink.merge_rows_pruned(spark, _kv(spark, [(0, "A")]), keys=["k"]) is not None
     assert sink.delete_where_dv(spark, [("k", "==", 11)]) is not None
     dv = list(sink._dv_commits().values())[0]
     assert dv["as_of_batch"] == 1, dv
@@ -1419,7 +1427,7 @@ def test_diff_where_restricts_both_sides(spark, tmp_path):
     sink = ManifestSinkTable(str(tmp_path / "t"), write_mode="committed")
     sink.write_batch(_kv(spark, [(i, "a") for i in range(10)]).coalesce(1), 0)
     sink.write_batch(_kv(spark, [(20, "n"), (30, "n")]).coalesce(1), 1)
-    assert sink.merge_rows(spark, _kv(spark, [(3, "U"), (7, "U")]), keys=["k"]) is not None
+    assert sink.merge_rows_pruned(spark, _kv(spark, [(3, "U"), (7, "U")]), keys=["k"]) is not None
     assert sink.delete_where_dv(spark, [("k", "==", 5)]) is not None
     full = sink.diff(spark, from_batch_id=0, key_cols=["k"])
     restricted = sink.diff(spark, from_batch_id=0, key_cols=["k"], where=[("k", "<", 25)])

@@ -46,7 +46,7 @@ def main() -> None:
         )
     upd = spark.range(0, 1_000_000, 1000).select(F.col("id").alias("k"), F.lit(-1).alias("v"))
     t0 = time.perf_counter()
-    assert sink.merge_rows(spark, upd, keys=["k"]) is not None
+    assert sink.merge_rows_pruned(spark, upd, keys=["k"]) is not None
     t_merge = time.perf_counter() - t0
     t0 = time.perf_counter()
     assert sink.delete_where_dv(spark, [("k", ">=", 2_000_000), ("k", "<", 2_001_000)]) is not None

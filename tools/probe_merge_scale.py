@@ -1,21 +1,19 @@
-"""Probe: pruned MERGE write amplification vs whole-table COW (VERDICT r9 #1).
+"""Probe: pruned MERGE write amplification (VERDICT r9 #1).
 
 Builds a key-clustered sink table (N_FILES files, disjoint key ranges —
 the post-compaction / ordered-ingest layout), then applies ONE small CDC
-batch (updates confined to a single file's range + a few inserts) through
-
-  (a) merge_rows          — whole-table copy-on-write, and
-  (b) merge_rows_pruned   — zone-map touched-file COW,
-
-and reports wall time plus how many data files each one rewrote. The
-claim under test: (b)'s rewrite cost is O(touched files) while (a)'s is
-O(table), so the gap must WIDEN as the table grows.
+batch (updates confined to a single file's range + a few inserts)
+through ``merge_rows_pruned`` — zone-map touched-file copy-on-write —
+and reports wall time plus how many data files it rewrote and
+pointer-copied. The claim under test: the rewrite cost is O(touched
+files), so the rewritten-file count stays flat as the table grows.
 
 Usage: python tools/probe_merge_scale.py [n_files] [rows_per_file]
 """
 
 from __future__ import annotations
 
+import os
 import sys
 import tempfile
 import time
@@ -23,7 +21,7 @@ import time
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from kafka_connect_bigquery_storage_write_spark.sinks.sink_table import ManifestSinkTable  # noqa: E402
 
 
@@ -59,24 +57,18 @@ def main():
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    for label, pruned in (("whole-table merge_rows", False), ("pruned merge_rows_pruned", True)):
-        root = tempfile.mkdtemp(prefix=f"probe_merge_{'p' if pruned else 'w'}_")
-        sink = build(spark, f"{root}/t", n_files, rows_per)
-        updates = cdc_batch(spark, rows_per, n_files).localCheckpoint(eager=True)
-        t0 = time.time()
-        if pruned:
-            res = sink.merge_rows_pruned(spark, updates, keys=["k"], target_files=2)
-            assert res is not None
-            rewritten, kept = res[1], res[2]
-        else:
-            assert sink.merge_rows(spark, updates, keys=["k"]) is not None
-            rewritten, kept = "all", 0
-        dt = time.time() - t0
-        n = sink.read(spark).count()
-        print(
-            f"{label}: {dt:6.2f}s  table={n_files}x{rows_per} rows  "
-            f"rewritten_files={rewritten} pointer_copied={kept}  rows_after={n}"
-        )
+    root = tempfile.mkdtemp(prefix="probe_merge_p_")
+    sink = build(spark, f"{root}/t", n_files, rows_per)
+    updates = cdc_batch(spark, rows_per, n_files).localCheckpoint(eager=True)
+    t0 = time.time()
+    res = sink.merge_rows_pruned(spark, updates, keys=["k"], target_files=2)
+    assert res is not None
+    dt = time.time() - t0
+    n = sink.read(spark).count()
+    print(
+        f"merge_rows_pruned: {dt:6.2f}s  table={n_files}x{rows_per} rows  "
+        f"rewritten_files={res[1]} pointer_copied={res[2]}  rows_after={n}"
+    )
 
 
 if __name__ == "__main__":
