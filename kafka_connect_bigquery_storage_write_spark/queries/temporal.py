@@ -517,7 +517,7 @@ def q139_point_in_time_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     a straggler cliff under power-user skew. The as-of form costs
     (C+P)log(C+P) per user — probed at 10^5 clicks x 10^5 purchases on
     ONE key: as-of 2.7s vs interval-join 12.3s and widening
-    quadratically (tools/probe_round7_ops.py).
+    quadratically (git show 4934493:tools/probe_round7_ops.py).
 
     Equivalence to interval containment: intervals per user are disjoint
     and half-open with valid_to = the NEXT click's ts, so the latest

@@ -197,27 +197,24 @@ class ChangeFeedConsumer:
         path = os.path.join(self.source.root, rel)
         if not os.path.exists(path):
             raise ValueError(f"change source for batch {bid} was vacuumed: {rel}")
-        rows = spark.read.schema(schema).parquet(path).select(*cols)
-        if kind == "insert" and self.target.schema() is None:
-            self.target.write_batch(rows, bid)
-            return kind
-        if kind == "insert" and not self.target._is_known(bid):
-            # plain append: the target batch marker is the idempotence CAS
-            self.target.write_batch(rows, bid)
-            return kind
-        if kind != "insert":
-            if self.target.schema() is None:
-                # seed: first commit the mirror sees is an upsert batch
-                self.target.write_batch(rows, bid)
-                return kind
-            rows = rows.localCheckpoint(eager=True)  # deterministic for the pruned merge
-            op = f"cdf-b{bid}"
-            for _ in range(self.cas_retries):
-                res = self.target.merge_rows_pruned(spark, rows, keys=self.keys, op_id=op)
-                if res is not None or os.path.exists(self.target._op_marker(op)):
-                    return kind
-            raise RuntimeError(f"cdf consumer: merge for batch {bid} lost the CAS {self.cas_retries} times")
+        if kind != "insert" and self.target.schema() is not None:
+            self._apply_upsert_group(spark, [bid])
+        elif self.target.schema() is None or not self.target._is_known(bid):
+            # the seed of an empty mirror (any kind), or a plain append
+            # whose target batch marker is the idempotence CAS
+            self.target.write_batch(spark.read.schema(schema).parquet(path).select(*cols), bid)
         return kind
+
+    def _merge(self, spark: SparkSession, rows: DataFrame, op: str, what: str, delete: bool = False) -> None:
+        """THE target merge of every group apply: ``merge_rows_pruned``
+        under op id ``op``, retried while it loses its snapshot CAS to
+        concurrent maintenance. None is also the answer of a no-op
+        (and of a replayed op), so completion is read off the op marker."""
+        for _ in range(self.cas_retries):
+            res = self.target.merge_rows_pruned(spark, rows, keys=self.keys, op_id=op, delete=delete)
+            if res is not None or self.target._op_done("mrgop", op):
+                return
+        raise RuntimeError(f"cdf consumer: {what} lost the CAS {self.cas_retries} times")
 
     def _apply_upsert_group(self, spark: SparkSession, bids: list[int]) -> None:
         """ONE pruned merge for a contiguous run of upsert-kind commits
@@ -232,10 +229,13 @@ class ChangeFeedConsumer:
           last sequential merge would have left;
         - keys absent from the run are untouched either way;
         - intra-batch duplicate keys still reach ``merge_rows_pruned``'s
-          own duplicate-key gate: the max-window keeps EVERY row of the
-          winning batch for a key (it does not row_number-dedup), so a
-          malformed change set raises exactly as the per-commit apply
-          did (pinned in tests/test_cdf_consumer.py).
+          own duplicate-key gate, in ANY batch of the run: the window
+          pass keeps every row of the winning batch for a key (it does
+          not row_number-dedup) AND every row of a ``(key, batch)``
+          group holding more than one row, so a malformed change set
+          raises as the per-commit apply of that batch did, even when a
+          later batch of the run rewrites the key (pinned in
+          tests/test_cdf_consumer.py).
 
         Replay: the group op id is derived from the run's span. A crash
         between the merge and the cursor advance replays the run —
@@ -248,7 +248,7 @@ class ChangeFeedConsumer:
 
         schema = self.source.schema()
         cols = [f.name for f in schema.fields]
-        for helper in ("_cdf_bid", "_cdf_max"):
+        for helper in ("_cdf_bid", "_cdf_max", "_cdf_n"):
             # the run merge tags rows with these helper columns; a source
             # column of the same name would be silently overwritten
             if helper in cols:
@@ -281,21 +281,15 @@ class ChangeFeedConsumer:
         for part in frames[1:]:
             rows = rows.unionByName(part)
         if len(bids) > 1:
-            w = Window.partitionBy(*self.keys)
+            # both windows cluster by the keys: one shuffle, no new action
             rows = (
-                rows.withColumn("_cdf_max", F.max("_cdf_bid").over(w))
-                .filter(F.col("_cdf_bid") == F.col("_cdf_max"))
+                rows.withColumn("_cdf_max", F.max("_cdf_bid").over(Window.partitionBy(*self.keys)))
+                .withColumn("_cdf_n", F.count(F.lit(1)).over(Window.partitionBy(*self.keys, "_cdf_bid")))
+                .filter((F.col("_cdf_bid") == F.col("_cdf_max")) | (F.col("_cdf_n") > 1))
             )
         rows = rows.select(*cols).localCheckpoint(eager=True)
         op = f"cdf-b{bids[0]}" if len(bids) == 1 else f"cdf-g{bids[0]}-{bids[-1]}"
-        for _ in range(self.cas_retries):
-            res = self.target.merge_rows_pruned(spark, rows, keys=self.keys, op_id=op)
-            if res is not None or os.path.exists(self.target._op_marker(op)):
-                return
-        raise RuntimeError(
-            f"cdf consumer: merge for batches {bids[0]}..{bids[-1]} lost the CAS "
-            f"{self.cas_retries} times"
-        )
+        self._merge(spark, rows, op, f"merge for batches {bids[0]}..{bids[-1]}")
 
     def _apply_dv(self, spark: SparkSession, dv_indexes: list[int]) -> None:
         """ONE keyed delete for a contiguous run of DV commits: deleting
@@ -311,17 +305,7 @@ class ChangeFeedConsumer:
             if len(dv_indexes) == 1
             else f"cdf-dvg{dv_indexes[0]}-{dv_indexes[-1]}"
         )
-        for _ in range(self.cas_retries):
-            res = self.target.merge_rows_pruned(
-                spark, keys_df, keys=self.keys, op_id=op, delete=True
-            )
-            # None is also the no-op-delete answer; the op marker records
-            # consumption either way
-            if res is not None or os.path.exists(self.target._op_marker(op)):
-                return
-        raise RuntimeError(
-            f"cdf consumer: DV {dv_indexes} delete lost the CAS {self.cas_retries} times"
-        )
+        self._merge(spark, keys_df, op, f"DV {dv_indexes} delete", delete=True)
 
     def _source_position(self) -> tuple[int, frozenset[int]]:
         """(max committed/change batch id, non-mor DV indexes) — the feed

@@ -441,9 +441,13 @@ def _where_cond(where: list[tuple]) -> "Column":
     Column — shared by the residual read filter, the DV delete scan and
     the copy-on-write delete, so the three can never disagree. SQL
     three-valued logic applies: a row whose predicate is NULL (a NULL
-    operand) is neither read nor deleted."""
+    operand) is neither read nor deleted. An empty predicate is
+    rejected: a delete must name the rows it removes (reads skip the
+    filter instead, see ``_apply_where``)."""
     from pyspark.sql import functions as F
 
+    if not where:
+        raise ValueError("empty predicate: pass at least one (column, op, literal) term")
     _check_ops(where)
     cond = None
     for c, op, v in where:
@@ -685,26 +689,30 @@ class ManifestSinkTable:
         DVs it saw or leaves their files untouched, so an intact DV always
         satisfies one of the first two conditions; the check is manifest
         metadata only (no data files opened)."""
-        mor = {
-            i: d
-            for i, d in self._dv_commits().items()
-            # staged-unpublished DVs are invisible: no reader applies them
-            # and no rewrite can invalidate them (rewrites defer while a
-            # transaction is open), so void-ness is undefined until commit
-            if d.get("mor") and int(d.get("as_of_batch", -1)) == batch_id and self._dv_live(d)
-        }
-        if not mor:
+        mine = [
+            d
+            for d in self._live_dvs(self._dv_commits(), self._latest_snapshot())
+            if d.get("mor") and int(d.get("as_of_batch", -1)) == batch_id
+        ]
+        if not mine:
             return []
-        absorbed = self._absorbed_dv_ids()
         visible = {os.path.basename(p) for p in self.visible_files()}
+        return [int(d["index"]) for d in self._void_mors(mine, visible)]
+
+    def _void_mors(self, dvs: list[dict], names: set[str]) -> list[dict]:
+        """The VOID MOR commits among visible ``dvs`` (``_live_dvs``)
+        against a listing's file basenames ``names``: some referenced
+        file is gone from the listing and no repair verdict (``morfix``
+        marker) covers the DV. Staged-unpublished DVs never get here: no
+        reader applies them and no rewrite can invalidate them (rewrites
+        defer while a transaction is open), so void-ness is undefined
+        until commit."""
         return [
-            i
-            for i, d in sorted(mor.items())
-            if i not in absorbed
-            and not set(d.get("files", [])) <= visible
-            and not os.path.exists(
-                os.path.join(self.root, "_commits", f"morfix-{batch_id}-{i}.marker")
-            )
+            d
+            for d in dvs
+            if d.get("mor")
+            and not set(d.get("files", [])) <= names
+            and not self._op_done("morfix", f"{int(d.get('as_of_batch', -1))}-{int(d['index'])}")
         ]
 
     def _mor_needs_repair(self, batch_id: int) -> bool:
@@ -735,10 +743,7 @@ class ManifestSinkTable:
         published (or the pass proved nothing resurrected), so a crash
         mid-repair just repairs again."""
         for i in void_ids:
-            self._atomic_create(
-                os.path.join(self.root, "_commits", f"morfix-{batch_id}-{i}.marker"),
-                json.dumps({"batch_id": batch_id, "void_dv": i}),
-            )
+            self._mark_op("morfix", f"{batch_id}-{i}", batch_id=batch_id, void_dv=i)
 
     def _committed_entries(self) -> dict[int, str]:
         return {b: m["dir"] for b, m in self._committed_manifests().items()}
@@ -1091,13 +1096,8 @@ class ManifestSinkTable:
         the barrier-snapshot protocol."""
         snap = self._latest_snapshot()
         absorbed = set((snap or {}).get("absorbed_batch_ids", []))
-        absorbed_dv = set((snap or {}).get("absorbed_dv_ids", []))
         dv_commits = self._dv_commits()
-        dvs = [
-            d
-            for i, d in sorted(dv_commits.items())
-            if i not in absorbed_dv and self._dv_live(d)
-        ]
+        dvs = self._live_dvs(dv_commits, snap)
         committed = self._committed_manifests(dv_commits)
         batch_ids = sorted(set(committed) - absorbed)
         manifests = self._manifests_from(snap or {}, dv_commits, committed=committed)
@@ -1246,20 +1246,7 @@ class ManifestSinkTable:
             state = self._visible_state()
             manifests, _batch_ids, _absorbed, _snap, dvs = state
             names = {e["name"] for e, _b in self._listed_entries(manifests, self.root)}
-            void = [
-                d
-                for d in dvs
-                if d.get("mor")
-                and not set(d.get("files", [])) <= names
-                and not os.path.exists(
-                    os.path.join(
-                        self.root,
-                        "_commits",
-                        f"morfix-{int(d.get('as_of_batch', -1))}-{int(d['index'])}.marker",
-                    )
-                )
-            ]
-            if not void:
+            if not self._void_mors(dvs, names):
                 return state
         raise RuntimeError(
             "rewrite: unrepaired void MOR delete vectors kept appearing "
@@ -1293,13 +1280,26 @@ class ManifestSinkTable:
                     )
                 self.upsert_mor(spark, None, keys=list(keys), batch_id=b)
 
-    def _op_marker(self, op_id: str) -> str:
-        return os.path.join(self.root, "_commits", f"mrgop-{op_id}.marker")
+    # -- replay markers: the only code that builds, checks or creates them --
+    #
+    # ``_commits/<kind>-<op_id>.marker``, one kind per idempotent op:
+    # ``mrgop`` (copy-on-write rewrites), ``dvop`` (``delete_where_dv``),
+    # ``morop`` (``upsert_mor``), ``morfix`` (a void MOR DV's repair
+    # verdict, keyed ``<batch id>-<dv index>``) and ``merge`` (the ingest
+    # pipeline's per-batch merge, keyed by batch id). A None or empty op
+    # id opts out.
 
-    def _mark_op(self, op_id: str | None, **info) -> None:
+    def _op_marker(self, kind: str, op_id) -> str:
+        return os.path.join(self.root, "_commits", f"{kind}-{op_id}.marker")
+
+    def _op_done(self, kind: str, op_id) -> bool:
+        """True when ``op_id`` already completed (its marker exists)."""
+        return op_id not in (None, "") and os.path.exists(self._op_marker(kind, op_id))
+
+    def _mark_op(self, kind: str, op_id, **info) -> None:
         """CAS the replay marker of a completed (or no-op) ``op_id``."""
-        if op_id:
-            self._atomic_create(self._op_marker(op_id), json.dumps({"op_id": op_id, **info}))
+        if op_id not in (None, ""):
+            self._atomic_create(self._op_marker(kind, op_id), json.dumps({"op_id": op_id, **info}))
 
     def _cow_rewrite(
         self,
@@ -1361,7 +1361,7 @@ class ManifestSinkTable:
         ]
         n_dirs = len(batch_ids) + len((snap or {}).get("compacted_dirs", []))
         if skip is not None and skip(n_dirs, sum(hit for _e, _b, hit in plan), bool(dvs)):
-            self._mark_op(op_id, rows=0)
+            self._mark_op("mrgop", op_id, rows=0)
             return None
         n_snap = (snap["index"] + 1) if snap else 0
         # attempt-unique output dir (same rule as batch appends): two
@@ -1399,7 +1399,7 @@ class ManifestSinkTable:
         ):
             shutil.rmtree(out_dir, ignore_errors=True)
             return None
-        self._mark_op(op_id, snapshot=n_snap)
+        self._mark_op("mrgop", op_id, snapshot=n_snap)
         return n_snap, len(rewritten), len(kept)
 
     def delete_where_pruned(self, spark: SparkSession, where: list[tuple], target_files: int = 2) -> int | None:
@@ -1495,18 +1495,13 @@ class ManifestSinkTable:
         n_small = sum(
             1 for e, _b in plan if e.get("rows") is None or e["rows"] < small_rows
         )
-        absorbed_dv = set(snap.get("absorbed_dv_ids", []))
         # the advisor reads the VISIBLE state: staged-unpublished DVs
         # (an open pending-mode transaction) are not pending read work,
         # and every rewrite DEFERS while one exists — advising binpack
         # on staged tombstones would make the cron act into the loud
         # open-transaction refusal, breaking the always-clears contract.
         # The open transaction is surfaced explicitly instead.
-        dvs = [
-            d
-            for i, d in sorted(dv_commits.items())
-            if i not in absorbed_dv and self._dv_live(d)
-        ]
+        dvs = self._live_dvs(dv_commits, snap)
         n_staged_open = sum(
             1 for d in dv_commits.values() if d.get("staged") and not d.get("_published")
         )
@@ -1516,22 +1511,7 @@ class ManifestSinkTable:
         # staged DVs are excluded — they may legitimately reference other
         # STAGED (not-yet-visible) files, and void-ness is undefined for
         # a transaction no reader can see
-        visible_names = {e["name"] for e, _b in plan}
-        n_void = sum(
-            1
-            for i, d in sorted(dv_commits.items())
-            if d.get("mor")
-            and i not in absorbed_dv
-            and self._dv_live(d)
-            and not set(d.get("files", [])) <= visible_names
-            and not os.path.exists(
-                os.path.join(
-                    self.root,
-                    "_commits",
-                    f"morfix-{int(d.get('as_of_batch', -1))}-{i}.marker",
-                )
-            )
-        )
+        n_void = len(self._void_mors(dvs, {e["name"] for e, _b in plan}))
         return {
             "n_files": n_files,
             "n_small_files": n_small,
@@ -1555,10 +1535,11 @@ class ManifestSinkTable:
     # and merge it at read, letting compaction absorb the tombstones later
     # (VERDICT r8 #4). A delete vector here is a parquet relation of
     # (file basename, row position) pairs under <root>/_deletes/, published
-    # by a CAS'd commit `_commits/dv-<i>.json`. Readers anti-join visible
-    # DVs on (_metadata.file_path basename, _metadata.row_index); the
-    # rewrite core (_cow_rewrite) applies visible DVs to the data it
-    # merges and records them in the new snapshot's ``absorbed_dv_ids``.
+    # by a CAS'd commit `_commits/dv-<i>.json` (_publish_tombstones is its
+    # one writer). Readers anti-join visible DVs on each scanned row's
+    # position (_positions); the rewrite core (_cow_rewrite) applies
+    # visible DVs to the data it merges and records them in the new
+    # snapshot's ``absorbed_dv_ids``.
     #
     # Concurrency protocol (no lost updates, pure CAS): a DV computed
     # against snapshot s is valid only while no REAL snapshot s+1 rewrites
@@ -1629,11 +1610,19 @@ class ManifestSinkTable:
         manifest listing — use ``_visible_state``/``_read_state`` (the
         one-listing rule, see ``_committed_manifests``). Staged
         pending-mode DVs enter only once their epoch publishes."""
-        absorbed = self._absorbed_dv_ids()
+        snap = self._latest_snapshot()
+        return self._live_dvs(self._dv_commits(), snap)
+
+    def _live_dvs(self, dv_commits: dict[int, dict], snap: dict | None, staged: bool = False) -> list[dict]:
+        """THE DV listing rule: the commits of ONE ``_dv_commits()``
+        listing that ``snap`` has not absorbed and that are live
+        (``_dv_live``); ``staged=True`` also keeps an open pending-mode
+        transaction's staged DVs (they publish with the caller's)."""
+        absorbed = set((snap or {}).get("absorbed_dv_ids", []))
         return [
             d
-            for i, d in sorted(self._dv_commits().items())
-            if i not in absorbed and self._dv_live(d)
+            for i, d in sorted(dv_commits.items())
+            if i not in absorbed and (staged or self._dv_live(d))
         ]
 
     def _dv_relation(self, spark: SparkSession, dvs: list[dict]) -> DataFrame:
@@ -1641,16 +1630,23 @@ class ManifestSinkTable:
         return spark.read.schema("file string, pos long").parquet(*paths).select("file", "pos").distinct()
 
     @staticmethod
-    def _apply_dv(df: DataFrame, dvrel: DataFrame) -> DataFrame:
-        """Anti-join a file scan against a DV relation. Must be applied
-        directly on the parquet scan (before other projections) so the
-        hidden ``_metadata`` struct is still resolvable."""
+    def _positions(df: DataFrame) -> DataFrame:
+        """Tag a parquet scan with each row's position: ``_dv_file`` (the
+        file basename) and ``_dv_pos`` (its row index) — the key of a
+        delete vector. Must be applied directly on the scan (before other
+        projections), while the hidden ``_metadata`` struct is still
+        resolvable."""
         from pyspark.sql import functions as F
 
-        tagged = df.withColumn(
+        return df.withColumn(
             "_dv_file", F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1)
         ).withColumn("_dv_pos", F.col("_metadata.row_index"))
-        out = tagged.join(
+
+    @classmethod
+    def _apply_dv(cls, df: DataFrame, dvrel: DataFrame) -> DataFrame:
+        """Anti-join a file scan against a DV relation (see ``_positions``
+        for where it may be applied)."""
+        out = cls._positions(df).join(
             dvrel.withColumnRenamed("file", "_dv_file").withColumnRenamed("pos", "_dv_pos"),
             ["_dv_file", "_dv_pos"],
             "left_anti",
@@ -1668,6 +1664,99 @@ class ManifestSinkTable:
             list(prior.get("absorbed_dv_ids", [])),
             barrier=True,
         )
+
+    def _publish_tombstones(
+        self, spark: SparkSession, plan, fields, *, op_id, what: str, absorbed_batch=None
+    ) -> tuple[int | None, int] | None:
+        """THE merge-on-read publish ``delete_where_dv`` and ``upsert_mor``
+        are short callers of (the barrier protocol is in the section
+        comment above):
+
+        1. list the latest snapshot ``prior``;
+        2. ``plan(prior)`` returns the NEW tombstones as a ``(file, pos)``
+           relation — the caller picks the candidate files and anti-joins
+           the positions its own DV listing rule already tombstones — or
+           None when no file is a candidate;
+        3. the tombstones are written ONCE; their count and referenced
+           files ride the write as observed metrics;
+        4. ``dv-<idx>.json`` is CAS'd from the common fields plus
+           ``fields(first)`` (``first``: this call has not published a DV
+           yet), bumping past concurrent publishers' indexes;
+        5. the guard loop occupies (or inspects) the next snapshot index:
+           barrier won or DV absorbed -> done; another writer's barrier ->
+           re-guard; a real rewrite -> the DV is void, recompute (at most
+           5 attempts). ``absorbed_batch(latest, idx) -> bool`` may settle
+           that last case first (MOR's absorbed-without-its-DV verify).
+
+        Returns ``(dv_index, n)``; when nothing is left to tombstone,
+        None if this call published no DV and ``(None, 0)`` if it did (a
+        void-retry found the work done). Replay markers are the
+        callers'."""
+        import shutil
+
+        from pyspark.sql import Observation
+        from pyspark.sql import functions as F
+
+        commits = os.path.join(self.root, "_commits")
+        published = False
+        for _attempt in range(5):
+            prior = self._latest_snapshot()
+            hits = plan(prior)
+            n = 0
+            if hits is not None:
+                rel_dir = os.path.join("_deletes", f"dv-{uuid.uuid4().hex[:12]}")
+                out_dir = os.path.join(self.root, rel_dir)
+                # the count + distinct-file facts the commit needs ride the
+                # write action itself as observed metrics (zero read-back
+                # actions; was write + read-back — r14 opt). repartition(1)
+                # instead of coalesce(1): coalesce collapses the ENTIRE
+                # candidate position scan into one task, while a repartition
+                # keeps the scan parallel and shuffles only the matched
+                # positions (O(batch), 16B rows) into the single output file.
+                obs = Observation()
+                (
+                    hits.observe(obs, F.count(F.lit(1)).alias("_n"), F.collect_set("file").alias("_files"))
+                    .repartition(1)
+                    .write.mode("overwrite")
+                    .parquet(out_dir)
+                )
+                got = obs.get
+                n = got["_n"]
+                if n == 0:
+                    shutil.rmtree(out_dir, ignore_errors=True)
+            if n == 0:
+                return (None, 0) if published else None
+            while True:  # dv-index CAS (concurrent publishers bump past each other)
+                idx = max(self._dv_commits(), default=-1) + 1
+                payload = {
+                    "index": idx,
+                    "dir": rel_dir,
+                    "rows": n,
+                    "files": sorted(got["_files"]),
+                    "read_snapshot": prior["index"] if prior else -1,
+                    "as_of_epoch": len([f for f in os.listdir(commits) if f.startswith("epoch-")]) - 1,
+                    "op_id": op_id,
+                    **fields(not published),
+                }
+                if self._atomic_create(os.path.join(commits, f"dv-{idx}.json"), json.dumps(payload)):
+                    break
+            published = True
+            # guard loop: occupy (or inspect) the next snapshot index
+            guard = prior
+            while True:
+                if self._create_barrier_snapshot(guard):
+                    return idx, n
+                latest = self._latest_snapshot()
+                if idx in set(latest.get("absorbed_dv_ids", [])):
+                    # a real snapshot raced us AND applied this DV
+                    return idx, n
+                if latest.get("barrier"):
+                    guard = latest  # another writer's barrier: files unchanged
+                    continue
+                if absorbed_batch is not None and absorbed_batch(latest, idx):
+                    return idx, n
+                break  # real snapshot rewrote our files: dv is void; recompute
+        raise RuntimeError(f"{what}: lost the snapshot race 5 times to concurrent rewrites")
 
     def delete_where_dv(
         self, spark: SparkSession, where: list[tuple], op_id: str | None = None
@@ -1688,121 +1777,50 @@ class ManifestSinkTable:
         one anti-join against the (small) DV relation until compaction
         absorbs it; ``compact()`` restores the zero-join read path.
         """
-        cond = _where_cond(where)
-        marker = os.path.join(self.root, "_commits", f"dvop-{op_id}.marker") if op_id else None
-        if marker and os.path.exists(marker):
-            return None
-        import shutil
-
         from pyspark.sql import functions as F
 
-        for _attempt in range(5):
-            prior = self._latest_snapshot()
+        cond = _where_cond(where)
+        if self._op_done("dvop", op_id):
+            return None
+
+        def plan(_prior):
             cand = self.visible_files(where)
             if not cand:
-                if marker:
-                    self._atomic_create(marker, json.dumps({"op_id": op_id, "rows": 0}))
                 return None
             hits = (
-                spark.read.schema(self.schema()).parquet(*cand)
-                .withColumn("file", F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1))
-                .withColumn("pos", F.col("_metadata.row_index"))
+                self._positions(spark.read.schema(self.schema()).parquet(*cand))
                 .filter(cond)
-                .select("file", "pos")
+                .select(F.col("_dv_file").alias("file"), F.col("_dv_pos").alias("pos"))
             )
             dvs = self.visible_dvs()
-            if dvs:
-                # already-tombstoned positions don't re-delete (exact count)
-                hits = hits.join(self._dv_relation(spark, dvs), ["file", "pos"], "left_anti")
-            rel_dir = os.path.join("_deletes", f"dv-{uuid.uuid4().hex[:12]}")
-            out_dir = os.path.join(self.root, rel_dir)
-            # the count + distinct-file facts the commit needs ride the
-            # write action itself as observed metrics (zero read-back
-            # actions; was write + read-back — r14 opt). repartition(1)
-            # instead of coalesce(1): coalesce collapses the ENTIRE
-            # candidate position scan into one task, while a repartition
-            # keeps the scan parallel and shuffles only the matched
-            # positions (O(batch), 16B rows) into the single output file.
-            from pyspark.sql import Observation
+            # already-tombstoned positions don't re-delete (exact count)
+            return hits.join(self._dv_relation(spark, dvs), ["file", "pos"], "left_anti") if dvs else hits
 
-            obs = Observation()
-            (
-                hits.observe(obs, F.count(F.lit(1)).alias("_n"), F.collect_set("file").alias("_files"))
-                .repartition(1)
-                .write.mode("overwrite")
-                .parquet(out_dir)
-            )
-            got = obs.get
-            n = got["_n"]
-            if n == 0:
-                shutil.rmtree(out_dir, ignore_errors=True)
-                if marker:
-                    self._atomic_create(marker, json.dumps({"op_id": op_id, "rows": 0}))
-                return None
-            files_ref = sorted(got["_files"])
-            while True:  # dv-index CAS (concurrent deleters bump past each other)
-                idx = max(self._dv_commits(), default=-1) + 1
-                created = self._atomic_create(
-                    os.path.join(self.root, "_commits", f"dv-{idx}.json"),
-                    json.dumps(
-                        {
-                            "index": idx,
-                            "dir": rel_dir,
-                            "rows": n,
-                            "files": files_ref,
-                            "where": [[c, op, _stat_norm(v)] for c, op, v in where],
-                            "read_snapshot": prior["index"] if prior else -1,
-                            # ALL batch markers ever committed (absorbed
-                            # included): after a rewrite absorbs every
-                            # marker, committed_ids() is empty and the old
-                            # max(committed_ids) stamp was -1 — ordering
-                            # this DV BEFORE every historical point, so
-                            # read_as_of(batch_id=N) for any pre-rewrite N
-                            # wrongly applied it and then raised
-                            # "references a compacted layout". A DV taken
-                            # when batch N was the latest write orders
-                            # after N regardless of later absorption.
-                            # CHANGE commits count too (round 10): a MERGE
-                            # batch in an upsert pipeline has no batch
-                            # marker — only a change-<id> commit — so a DV
-                            # taken after merges 1..N used to stamp as-of
-                            # the seed batch, mis-ordering it BEFORE those
-                            # merges in the change feed (a feed consumer
-                            # would delete, then the replayed merges
-                            # resurrect) and wrongly applying it to
-                            # pre-merge time travel.
-                            "as_of_batch": max(
-                                [*self._marker_ids(), *self._change_commits()], default=-1
-                            ),
-                            "as_of_epoch": len(
-                                [f for f in os.listdir(os.path.join(self.root, "_commits")) if f.startswith("epoch-")]
-                            ) - 1,
-                            "op_id": op_id,
-                        }
-                    ),
-                )
-                if created:
-                    break
-            # guard loop: occupy (or inspect) the next snapshot index
-            guard = prior
-            while True:
-                if self._create_barrier_snapshot(guard):
-                    if marker:
-                        self._atomic_create(marker, json.dumps({"op_id": op_id, "rows": n, "dv": idx}))
-                    return idx, n
-                latest = self._latest_snapshot()
-                if idx in set(latest.get("absorbed_dv_ids", [])):
-                    # a real snapshot raced us AND applied this DV
-                    if marker:
-                        self._atomic_create(marker, json.dumps({"op_id": op_id, "rows": n, "dv": idx}))
-                    return idx, n
-                if latest.get("barrier"):
-                    guard = latest  # another deleter's barrier: files unchanged
-                    continue
-                break  # real snapshot rewrote our files: dv is void; recompute
-        raise RuntimeError(
-            "delete_where_dv: lost the snapshot race 5 times to concurrent rewrites"
-        )
+        def fields(_first):
+            return {
+                "where": [[c, op, _stat_norm(v)] for c, op, v in where],
+                # ALL batch markers ever committed (absorbed included):
+                # after a rewrite absorbs every marker, committed_ids() is
+                # empty and the old max(committed_ids) stamp was -1 —
+                # ordering this DV BEFORE every historical point, so
+                # read_as_of(batch_id=N) for any pre-rewrite N wrongly
+                # applied it and then raised "references a compacted
+                # layout". A DV taken when batch N was the latest write
+                # orders after N regardless of later absorption. CHANGE
+                # commits count too (round 10): a MERGE batch in an upsert
+                # pipeline has no batch marker — only a change-<id> commit
+                # — so a DV taken after merges 1..N used to stamp as-of the
+                # seed batch, mis-ordering it BEFORE those merges in the
+                # change feed (a feed consumer would delete, then the
+                # replayed merges resurrect) and wrongly applying it to
+                # pre-merge time travel.
+                "as_of_batch": max([*self._marker_ids(), *self._change_commits()], default=-1),
+            }
+
+        res = self._publish_tombstones(spark, plan, fields, op_id=op_id, what="delete_where_dv")
+        idx, n = res or (None, 0)
+        self._mark_op("dvop", op_id, rows=n, dv=idx)
+        return None if idx is None else (idx, n)
 
     # -- change-data-feed (round 9, VERDICT r8 #7) -------------------------
     #
@@ -1970,11 +1988,7 @@ class ManifestSinkTable:
                     f"delete vector {i}'s change source was vacuumed or rewritten: "
                     f"{(missing or [d['dir']])[:3]}"
                 )
-            scan = (
-                spark.read.schema(schema).parquet(*[path_of[f] for f in d["files"]])
-                .withColumn("_dv_file", F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1))
-                .withColumn("_dv_pos", F.col("_metadata.row_index"))
-            )
+            scan = self._positions(spark.read.schema(schema).parquet(*[path_of[f] for f in d["files"]]))
             dvrel = (
                 spark.read.schema("file string, pos long").parquet(dv_dir)
                 .withColumnRenamed("file", "_dv_file")
@@ -2193,7 +2207,7 @@ class ManifestSinkTable:
         from pyspark.sql import Window
         from pyspark.sql import functions as F
 
-        if op_id and os.path.exists(self._op_marker(op_id)):
+        if self._op_done("mrgop", op_id):
             return None
         schema = self.schema()
         if schema is None:
@@ -2223,7 +2237,7 @@ class ManifestSinkTable:
             dup_error=None if delete else "merge_rows_pruned: updates contain duplicate keys (ambiguous merge source)",
         )
         if touched is None:  # no update keys
-            self._mark_op(op_id, rows=0)
+            self._mark_op("mrgop", op_id, rows=0)
             return None
 
         if delete:
@@ -2288,10 +2302,11 @@ class ManifestSinkTable:
         available.
 
         Concurrency/replay: the position scan runs against a listed
-        snapshot and guards itself with the ``delete_where_dv``
-        barrier-snapshot protocol — if a real snapshot rewrote the
-        referenced files first, the tombstones are void (dead basenames;
-        old rows would RESURRECT next to the new ones) and the scan
+        snapshot and publishes through ``_publish_tombstones``, the
+        barrier-snapshot core it shares with ``delete_where_dv`` — if a
+        real snapshot rewrote the referenced files first, the tombstones
+        are void (dead basenames; old rows would RESURRECT next to the
+        new ones) and the scan
         recomputes against the fresh layout, committing a follow-up
         tombstone-only DV (the insert, already published, is never
         re-appended; its own files are excluded from every scan). A
@@ -2341,8 +2356,7 @@ class ManifestSinkTable:
         from pyspark.sql import functions as F
 
         pending = self.write_mode == "pending"
-        marker = os.path.join(self.root, "_commits", f"morop-{op_id}.marker") if op_id else None
-        if marker and os.path.exists(marker):
+        if self._op_done("morop", op_id):
             return None
         repair = False
         if self._is_known(batch_id):
@@ -2382,8 +2396,7 @@ class ManifestSinkTable:
                 # upserted rows. Verify instead and mark repaired.
                 self._verify_mor_merged(spark, updates, keys, batch_id)
                 self._mor_mark_repaired(batch_id, void_ids)
-                if marker:  # crash-window dedup marker, like every exit
-                    self._atomic_create(marker, json.dumps({"op_id": op_id, "rows": 0}))
+                self._mark_op("morop", op_id, rows=0)  # crash-window dedup, like every exit
                 return None
         if self.schema() is None:
             # seed write: nothing to tombstone — a plain append IS the
@@ -2394,8 +2407,7 @@ class ManifestSinkTable:
                 if not dup.isEmpty():
                     raise ValueError("upsert_mor: updates contain duplicate keys (ambiguous merge source)")
             res = self.write_batch(updates, batch_id)
-            if marker:
-                self._atomic_create(marker, json.dumps({"op_id": op_id, "seed": True}))
+            self._mark_op("morop", op_id, seed=True)
             return None if res.already_exists else (None, 0)
         if not repair and self.schema_evolution == "additive":
             self._evolve_schema(updates)
@@ -2410,8 +2422,7 @@ class ManifestSinkTable:
             dup_error=None if repair else "upsert_mor: updates contain duplicate keys (ambiguous merge source)",
         )
         if touched is None:  # no update rows
-            if marker:
-                self._atomic_create(marker, json.dumps({"op_id": op_id, "rows": 0}))
+            self._mark_op("morop", op_id, rows=0)
             return None
         # omitted NULLABLE columns null-fill (the additive-evolution read
         # contract); a missing required column still fails loudly below
@@ -2423,11 +2434,11 @@ class ManifestSinkTable:
         if repair:
             # the batch's files already exist and are already published
             ins = self._mor_insert_manifests()[batch_id]
-            rel_dir, data_dir = ins["dir"], os.path.join(self.root, "data", ins["dir"])
-            insert_manifest = {"batch_id": batch_id, "dir": rel_dir, "files": ins.get("files") or []}
+            data_dir = os.path.join(self.root, "data", ins["dir"])
+            insert_manifest = {"batch_id": batch_id, "dir": ins["dir"], "files": ins.get("files") or []}
         else:
             # the insert files are written ONCE, up front; they become
-            # visible only at the publish CAS below (marker or dv commit)
+            # visible only at the publish CAS (marker or dv commit)
             rel_dir = os.path.join(f"batch={batch_id}", f"attempt={uuid.uuid4().hex[:12]}")
             data_dir = os.path.join(self.root, "data", rel_dir)
             self.retry.run(
@@ -2441,13 +2452,12 @@ class ManifestSinkTable:
             }
         own_files = {e["name"] for e in insert_manifest["files"]}
         own_batch_dir = f"batch={batch_id}"
-        published = repair  # insert manifest rides only the FIRST dv commit
-        for _attempt in range(5):
+
+        def plan(prior):
             # ONE DV-log listing drives the candidate manifests, the
             # staged-transaction members AND the already-tombstoned
             # filter below (the one-listing rule)
             dv_listing = self._dv_commits()
-            prior = self._latest_snapshot()
             listing = self._manifests_from(prior or {}, dv_listing)
             if pending:
                 # staged rows publish in the SAME epoch as this merge, so
@@ -2460,166 +2470,88 @@ class ManifestSinkTable:
                     + [m for _b, m in sorted(self._staged_manifests().items())]
                     + [m for _b, m in sorted(self._staged_mor_inserts(dv_listing).items())]
                 )
-            cand: list[str] = []
-            for m in listing:
-                # never tombstone THIS batch's own rows: on a void-retry
-                # (or a zombie twin's publish) the batch is already
-                # visible and its files contain every update key
-                if m["dir"] == own_batch_dir or m["dir"].startswith(own_batch_dir + os.sep):
-                    continue
-                base = os.path.join(self.root, "data", m["dir"])
-                entries = m["files"]
-                if entries is None:
-                    entries = [
-                        {"name": f, "rows": None, "stats": {}}
-                        for f in sorted(os.listdir(base))
-                        if f.endswith(".parquet")
-                    ]
-                for e in entries:
-                    if e["name"] not in own_files and touched(e):
-                        cand.append(os.path.join(base, e["name"]))
-            n = 0
-            rel_dv = None
-            if cand:
-                scan = (
-                    spark.read.schema(schema).parquet(*cand)
-                    .withColumn("file", F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1))
-                    .withColumn("pos", F.col("_metadata.row_index"))
-                )
-                upd_keys, match = _key_match(updates, keys)
-                hits = scan.join(upd_keys, match, "left_semi").select("file", "pos")
-                absorbed_dv = set((prior or {}).get("absorbed_dv_ids", []))
-                # already-tombstoned positions don't re-tombstone; in
-                # pending mode the open transaction's staged DVs count
-                # (they publish with this one)
-                dvs = [
-                    d
-                    for i, d in sorted(dv_listing.items())
-                    if i not in absorbed_dv and (pending or self._dv_live(d))
-                ]
-                if dvs:
-                    hits = hits.join(self._dv_relation(spark, dvs), ["file", "pos"], "left_anti")
-                rel_dv = os.path.join("_deletes", f"dv-{uuid.uuid4().hex[:12]}")
-                dv_dir = os.path.join(self.root, rel_dv)
-                # both facts the commit needs (total tombstone count + the
-                # distinct referenced files) ride the write action itself
-                # as observed metrics — zero read-back actions (was write +
-                # one read-back, and before that write + count + collect —
-                # r14 opt). repartition(1) keeps the candidate position
-                # scan parallel (coalesce(1) serialized it into one task)
-                # and shuffles only the matched positions.
-                from pyspark.sql import Observation
+            # never tombstone THIS batch's own rows: on a void-retry (or a
+            # zombie twin's publish) the batch is already visible and its
+            # files contain every update key
+            listing = [
+                m for m in listing
+                if m["dir"] != own_batch_dir and not m["dir"].startswith(own_batch_dir + os.sep)
+            ]
+            cand = [
+                os.path.join(base, e["name"])
+                for e, base in self._listed_entries(listing, self.root)
+                if e["name"] not in own_files and touched(e)
+            ]
+            if not cand:
+                return None
+            upd_keys, match = _key_match(updates, keys)
+            hits = (
+                self._positions(spark.read.schema(schema).parquet(*cand))
+                .join(upd_keys, match, "left_semi")
+                .select(F.col("_dv_file").alias("file"), F.col("_dv_pos").alias("pos"))
+            )
+            # already-tombstoned positions don't re-tombstone; in pending
+            # mode the open transaction's staged DVs count (they publish
+            # with this one)
+            dvs = self._live_dvs(dv_listing, prior, staged=pending)
+            return hits.join(self._dv_relation(spark, dvs), ["file", "pos"], "left_anti") if dvs else hits
 
-                obs = Observation()
-                (
-                    hits.observe(obs, F.count(F.lit(1)).alias("_n"), F.collect_set("file").alias("_files"))
-                    .repartition(1)
-                    .write.mode("overwrite")
-                    .parquet(dv_dir)
-                )
-                got = obs.get
-                n = got["_n"]
-                if n == 0:
-                    shutil.rmtree(dv_dir, ignore_errors=True)
-                    rel_dv = None
-            if n == 0 and not published:
-                # pure insert: publish via the ordinary batch-marker CAS
-                # (pending mode: the STAGED marker — invisible until the
-                # epoch, exactly like a plain pending append)
-                ins_marker = self._staged_marker(batch_id) if pending else self._commit_marker(batch_id)
-                if not self._atomic_create(ins_marker, json.dumps(insert_manifest)):
-                    shutil.rmtree(data_dir, ignore_errors=True)  # replay raced us
-                    if marker:
-                        self._atomic_create(marker, json.dumps({"op_id": op_id, "rows": 0}))
-                    return None
-                if marker:
-                    self._atomic_create(marker, json.dumps({"op_id": op_id, "rows": 0}))
-                return (None, 0)
-            if n == 0 and published:
-                # void-retry found nothing left to tombstone (the racing
-                # rewrite read a state already carrying our first DV's
-                # effect, or the matched rows were concurrently deleted)
-                if repair:
-                    self._mor_mark_repaired(batch_id, void_ids)
-                if marker:
-                    self._atomic_create(marker, json.dumps({"op_id": op_id, "rows": 0}))
-                return (None, 0)
-            files_ref = sorted(got["_files"])
-            while True:  # dv-index CAS (concurrent committers bump past each other)
-                idx = max(self._dv_commits(), default=-1) + 1
-                created = self._atomic_create(
-                    os.path.join(self.root, "_commits", f"dv-{idx}.json"),
-                    json.dumps(
-                        {
-                            "index": idx,
-                            "dir": rel_dv,
-                            "rows": n,
-                            "files": files_ref,
-                            "mor": True,
-                            "insert": None if published else insert_manifest,
-                            # key columns ride in the commit so a rewrite
-                            # can re-derive lost tombstones from the batch
-                            # dir alone (_repair_void_mors)
-                            "keys": list(keys),
-                            "read_snapshot": prior["index"] if prior else -1,
-                            # the DV applies exactly from this batch onward:
-                            # travel to batch_id sees inserts + tombstones,
-                            # travel before it sees neither
-                            "as_of_batch": batch_id,
-                            "as_of_epoch": len(
-                                [f for f in os.listdir(os.path.join(self.root, "_commits")) if f.startswith("epoch-")]
-                            )
-                            - 1,
-                            "op_id": op_id,
-                            # pending mode: invisible until an epoch file
-                            # names this index in dv_indexes (commit());
-                            # time travel then derives visibility from
-                            # that epoch, not as_of_epoch above
-                            "staged": pending,
-                        }
-                    ),
-                )
-                if created:
-                    break
-            published = True
-            # guard loop: occupy (or inspect) the next snapshot index
-            guard = prior
-            while True:
-                if self._create_barrier_snapshot(guard):
-                    if repair:
-                        self._mor_mark_repaired(batch_id, void_ids)
-                    if marker:
-                        self._atomic_create(marker, json.dumps({"op_id": op_id, "rows": n, "dv": idx}))
-                    return idx, n
-                latest = self._latest_snapshot()
-                if idx in set(latest.get("absorbed_dv_ids", [])):
-                    # a real snapshot raced us AND applied this DV (its
-                    # listing saw our commit, so it absorbed the insert
-                    # batch too)
-                    if repair:
-                        self._mor_mark_repaired(batch_id, void_ids)
-                    if marker:
-                        self._atomic_create(marker, json.dumps({"op_id": op_id, "rows": n, "dv": idx}))
-                    return idx, n
-                if latest.get("barrier"):
-                    guard = latest  # another committer's barrier: files unchanged
-                    continue
-                if batch_id in set(latest.get("absorbed_batch_ids", [])):
-                    # distinct case (ADVICE r11): the racing rewrite
-                    # absorbed this batch's insert rows — now under NEW
-                    # basenames — without absorbing this DV. A key-based
-                    # recompute would tombstone the upserted rows
-                    # themselves; verify the merged state instead
-                    # (raises on duplicates), and mark the verified DV
-                    # repaired so later rewrites don't re-run the verify
-                    # job for a conclusion already reached.
-                    self._verify_mor_merged(spark, updates, keys, batch_id)
-                    self._mor_mark_repaired(batch_id, void_ids if repair else [idx])
-                    if marker:
-                        self._atomic_create(marker, json.dumps({"op_id": op_id, "rows": n, "dv": idx}))
-                    return idx, n
-                break  # real snapshot rewrote our referenced files: recompute
-        raise RuntimeError("upsert_mor: lost the snapshot race 5 times to concurrent rewrites")
+        def fields(first):
+            return {
+                "mor": True,
+                # the insert manifest rides only the FIRST dv commit
+                "insert": insert_manifest if first and not repair else None,
+                # key columns ride in the commit so a rewrite can re-derive
+                # lost tombstones from the batch dir alone
+                # (_repair_void_mors)
+                "keys": list(keys),
+                # the DV applies exactly from this batch onward: travel to
+                # batch_id sees inserts + tombstones, travel before it sees
+                # neither
+                "as_of_batch": batch_id,
+                # pending mode: invisible until an epoch file names this
+                # index in dv_indexes (commit()); time travel then derives
+                # visibility from that epoch, not as_of_epoch
+                "staged": pending,
+            }
+
+        def absorbed_batch(latest, idx):
+            if batch_id not in set(latest.get("absorbed_batch_ids", [])):
+                return False
+            # distinct case (ADVICE r11): the racing rewrite absorbed this
+            # batch's insert rows — now under NEW basenames — without
+            # absorbing this DV. A key-based recompute would tombstone the
+            # upserted rows themselves; verify the merged state instead
+            # (raises on duplicates), and mark the verified DV repaired so
+            # later rewrites don't re-run the verify job for a conclusion
+            # already reached.
+            self._verify_mor_merged(spark, updates, keys, batch_id)
+            if not repair:
+                self._mor_mark_repaired(batch_id, [idx])
+            return True
+
+        res = self._publish_tombstones(
+            spark, plan, fields, op_id=op_id, what="upsert_mor", absorbed_batch=absorbed_batch
+        )
+        if res is None and not repair:
+            # pure insert: publish via the ordinary batch-marker CAS
+            # (pending mode: the STAGED marker — invisible until the
+            # epoch, exactly like a plain pending append)
+            ins_marker = self._staged_marker(batch_id) if pending else self._commit_marker(batch_id)
+            if self._atomic_create(ins_marker, json.dumps(insert_manifest)):
+                res = (None, 0)
+            else:
+                shutil.rmtree(data_dir, ignore_errors=True)  # replay raced us
+            self._mark_op("morop", op_id, rows=0)
+            return res
+        # published (or a void-retry found nothing left to tombstone: the
+        # racing rewrite read a state already carrying our first DV's
+        # effect, or the matched rows were concurrently deleted)
+        idx, n = res or (None, 0)
+        if repair:
+            self._mor_mark_repaired(batch_id, void_ids)
+        self._mark_op("morop", op_id, rows=n, dv=idx)
+        return idx, n
 
     def _verify_mor_merged(self, spark: SparkSession, updates: DataFrame, keys: list[str], batch_id: int) -> None:
         """The distinct absorbed-batch/unabsorbed-DV case (ADVICE r11):
@@ -3183,15 +3115,12 @@ class ManifestSinkTable:
         pending-DV refusal; otherwise returns the visible manifests."""
         dv_commits = self._dv_commits()
         snap = self._latest_snapshot() or {}
-        absorbed_dv = set(snap.get("absorbed_dv_ids", []))
         # staged-unpublished DVs (an open pending-mode transaction) are
         # NOT pending read work — the visible state carries zero
         # tombstones, so stats/bucketed answers over it are exact; and
         # the refusal's advice ('run compact() first') would dead-end in
         # compact()'s own open-transaction deferral (round-13 review)
-        if any(
-            i not in absorbed_dv and self._dv_live(d) for i, d in dv_commits.items()
-        ):
+        if self._live_dvs(dv_commits, snap):
             raise ValueError(
                 f"{what} unavailable while delete vectors are pending; run compact() first"
             )
@@ -3220,14 +3149,8 @@ class ManifestSinkTable:
         existed."""
         dv_commits = self._dv_commits()
         snap = self._latest_snapshot() or {}
-        absorbed_dv = set(snap.get("absorbed_dv_ids", []))
-        dvs = [
-            d
-            for i, d in sorted(dv_commits.items())
-            if i not in absorbed_dv and self._dv_live(d)
-        ]
         manifests = self._manifests_from(snap, dv_commits)
-        return self._prune_paths(manifests, where), dvs
+        return self._prune_paths(manifests, where), self._live_dvs(dv_commits, snap)
 
     def _prune_paths(self, manifests: list[dict], where: list[tuple] | None) -> list[str]:
         _check_ops(where)

@@ -216,13 +216,9 @@ class IngestPipeline:
         measured it (process_batch's counts aggregate) — saves the
         per-batch isEmpty job (r14 opt).
         """
-        import json as _json
-        import os as _os
-
         from kafka_connect_bigquery_storage_write_spark.sinks.sink_table import AppendResult
 
-        marker = _os.path.join(self._sink.root, "_commits", f"merge-{batch_id}.marker")
-        if _os.path.exists(marker):
+        if self._sink._op_done("merge", batch_id):
             return AppendResult(batch_id=batch_id, rows=0, already_exists=True)
         keys = list(self.config.upsert_keys)
         if self.config.upsert_order_col:
@@ -239,7 +235,7 @@ class IngestPipeline:
             # content too — a staged seed followed by a staged merge is
             # one open transaction, not two seeds)
             result = self._sink.write_batch(rows, batch_id)
-            self._sink._atomic_create(marker, _json.dumps({"batch_id": batch_id, "seed": True}))
+            self._sink._mark_op("merge", batch_id, seed=True)
             return result
         if rows.isEmpty() if n_rows is None else n_rows == 0:
             # an all-DLQ'd (or empty-trigger) micro-batch has no change
@@ -248,7 +244,7 @@ class IngestPipeline:
             # CAS and wedge on replay (ADVICE r10) — mark the batch
             # applied as a no-op instead (no changelog entry either: CDF
             # consumers skip unknown batch ids by construction)
-            self._sink._atomic_create(marker, _json.dumps({"batch_id": batch_id, "rows": 0}))
+            self._sink._mark_op("merge", batch_id, rows=0)
             return AppendResult(batch_id=batch_id, rows=0)
         # the deduped change set feeds TWO jobs below (changelog write +
         # merge); checkpoint so the parse/validate/window pipeline runs
@@ -263,7 +259,7 @@ class IngestPipeline:
             # retries and the barrier protocol internally; None here can
             # only mean a replayed/raced publish of this batch id.
             res = self._sink.upsert_mor(rows.sparkSession, rows, keys=keys, batch_id=batch_id)
-            self._sink._atomic_create(marker, _json.dumps({"batch_id": batch_id}))
+            self._sink._mark_op("merge", batch_id)
             return AppendResult(batch_id=batch_id, rows=-1, already_exists=res is None)
         # change-data-feed: log this batch's (deduped) change set before
         # merging — the merge materializes the whole table, so without the
@@ -291,7 +287,7 @@ class IngestPipeline:
                 f"merge batch {batch_id}: snapshot CAS lost 5 times to concurrent "
                 "maintenance; not marking the batch committed (replay will retry)"
             )
-        self._sink._atomic_create(marker, _json.dumps({"batch_id": batch_id}))
+        self._sink._mark_op("merge", batch_id)
         return AppendResult(batch_id=batch_id, rows=-1)
 
     # -- batch entry (tests/backfill/bench) ---------------------------------
@@ -376,7 +372,7 @@ class IngestPipeline:
         discarded = self._sink.reset()
         for b in discarded:
             with _contextlib.suppress(FileNotFoundError):
-                _os.remove(_os.path.join(self._sink.root, "_commits", f"merge-{b}.marker"))
+                _os.remove(self._sink._op_marker("merge", b))
         return discarded
 
     def read_sink(self, spark) -> DataFrame:

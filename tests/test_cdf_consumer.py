@@ -252,6 +252,25 @@ def test_intra_batch_dup_keys_still_raise_in_group(spark, tmp_path):
         c.run_available_now(spark)
 
 
+def test_dup_keys_in_earlier_batch_of_run_raise(spark, tmp_path):
+    """ADVICE r15: a duplicate-key change set in a NON-winning batch of a
+    run must still reach the merge gate. Batch 1 holds key 1 twice and
+    batch 2 rewrites key 1, so last-writer-wins alone would drop batch
+    1's rows; the sequential apply of batch 1 raises, and so must the
+    run merge."""
+    import pytest as _pytest
+
+    src = _mk(spark, tmp_path, "src")
+    src.write_batch(_kv(spark, [(i, "a") for i in range(10)]).coalesce(1), 0)
+    assert src.log_changes(_kv(spark, [(1, "X"), (1, "Y")]).coalesce(1), 1)
+    _merge_logged(src, spark, _kv(spark, [(1, "Z")]), 2)  # groups with b1
+    tgt = _mk(spark, tmp_path, "tgt")
+    c = ChangeFeedConsumer(src, tgt, keys=["k"], checkpoint_dir=str(tmp_path / "ckpt"))
+    with _pytest.raises(ValueError, match="duplicate keys"):
+        c.run_available_now(spark)
+    assert c.cursor()["after_batch_id"] == 0  # the seed applied; the run did not
+
+
 def test_lease_refresh_and_advance_per_group(spark, tmp_path, monkeypatch):
     """ADVICE r12's lease rule at the round-15 grain, pinned: one cursor
     advance per applied GROUP and at least one lease refresh before each

@@ -487,3 +487,80 @@ def test_pipeline_cadence_commit_races_finalizer(spark, tmp_path, monkeypatch, h
     assert pipe.run_batch(env(sorted(PIPE_MERGE.items())), batch_id=1).already_exists
     sink.compact(spark)
     assert _content(sink, spark) == {**SEED, **PIPE_MERGE}
+
+
+# -- crash points of the merge-on-read publish --------------------------------
+#
+# delete_where_dv and upsert_mor publish through one tombstone core; its
+# durable side effects are the tombstone dir, the dv-<idx>.json CAS, the
+# barrier snapshot and the op marker. A crash at the dv CAS or right
+# after it, re-run with the same op id (and batch id), must leave the
+# grid's invariants intact.
+
+DV_OPS = {
+    "dvdel": (
+        lambda s, sp: s.delete_where_dv(sp, [("k", ">=", 90)], op_id="crash-del"),
+        lambda m: [m.pop(k) for k in DVDEL],
+    ),
+    "upsert": (
+        lambda s, sp: s.upsert_mor(
+            sp, _kv(sp, sorted(UPSERT.items())), keys=["k"], batch_id=51, op_id="crash-mor"
+        ),
+        lambda m: m.update(UPSERT),
+    ),
+}
+
+
+def _crash_once(monkeypatch, sink, name, when=lambda *a: True):
+    real = getattr(sink, name)
+    state = {"fired": False}
+
+    def wrapped(*a, **kw):
+        if not state["fired"] and when(*a):
+            state["fired"] = True
+            raise RuntimeError("simulated crash")
+        return real(*a, **kw)
+
+    monkeypatch.setattr(sink, name, wrapped)
+    return state
+
+
+CRASH_POINTS = {
+    # the dv-<idx>.json CAS itself raises (nothing published)
+    "dv_cas": lambda mp, s: _crash_once(
+        mp, s, "_atomic_create", lambda path, _payload: os.path.basename(path).startswith("dv-")
+    ),
+    # the CAS landed; the process dies before the barrier and the marker
+    "after_cas": lambda mp, s: _crash_once(mp, s, "_create_barrier_snapshot"),
+}
+
+
+@pytest.mark.parametrize("crash", sorted(CRASH_POINTS))
+@pytest.mark.parametrize("op", sorted(DV_OPS))
+def test_dv_publish_crash_point_replays_exactly_once(spark, tmp_path, monkeypatch, op, crash):
+    sink = _seeded(spark, tmp_path)
+    run, model = DV_OPS[op]
+    state = CRASH_POINTS[crash](monkeypatch, sink)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        run(sink, spark)
+    monkeypatch.undo()
+    assert state["fired"]
+
+    run(sink, spark)  # the re-run of the same op
+    expected = dict(SEED)
+    model(expected)
+    assert _content(sink, spark) == expected
+
+    # a second replay is a no-op: no new commit, marker or tombstone
+    def _layout():
+        return {d: sorted(os.listdir(os.path.join(sink.root, d))) for d in ("_commits", "_deletes")}
+
+    before = _layout()
+    assert run(sink, spark) is None
+    assert _layout() == before
+    assert _content(sink, spark) == expected
+
+    # a terminal compact absorbs every DV
+    assert sink.compact(spark) is not None
+    assert sink.visible_dvs() == []
+    assert _content(sink, spark) == expected

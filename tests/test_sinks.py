@@ -742,6 +742,25 @@ def test_delete_where_pruned_keeps_null_predicate_rows(spark, tmp_path):
     assert sorted(r["k"] for r in rows if r["k"] is not None) == [*range(5, 10), *range(100, 110)]
 
 
+def test_empty_predicate_delete_raises_and_changes_nothing(spark, tmp_path):
+    """An empty predicate is rejected by both delete paths before any
+    side effect — a delete must name the rows it removes — while a read
+    keeps treating an empty ``where`` as no filter."""
+    sink = ManifestSinkTable(str(tmp_path / "t"), write_mode="committed")
+    sink.write_batch(spark.createDataFrame([(k, "a") for k in range(10)], "k long, v string").coalesce(1), 0)
+    assert sink.delete_where_dv(spark, [("k", "<", 2)]) is not None  # _deletes/ is non-empty
+
+    def _layout():
+        return {d: sorted(os.listdir(os.path.join(sink.root, d))) for d in ("_commits", "_deletes")}
+
+    before = _layout()
+    for delete in (sink.delete_where_pruned, sink.delete_where_dv):
+        with pytest.raises(ValueError, match="empty predicate"):
+            delete(spark, [])
+    assert _layout() == before
+    assert sorted(r["k"] for r in sink.read(spark, where=[]).collect()) == list(range(2, 10))
+
+
 def test_bloom_skipping_prunes_scattered_keys(spark, tmp_path):
     """Bloom-index skipping (round 8): keys scattered by k % 4 make every
     file's [min, max] straddle every key — zone maps keep ALL files — yet
