@@ -1,8 +1,12 @@
 """Benchmark harness: runs every registered query at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-bounded JSON line: {"metric", "value", "unit", "n_queries", "top5", "sf", ...};
-per-query timings are written to BENCH_LOCAL.json (the stdout line must fit
-the driver's 2000-char tail capture at any registry size).
+(default: the sf0.1 fixtures) on local[$SPARK_GRAFT_CPUS] and prints ONE
+bounded JSON line: {"metric", "value", "unit", "n_queries", "top5",
+"top_regressions", "sf", ...}. Per-query detail is written to
+BENCH_PER_QUERY.json, overwritten on every run: the min-of-2 wall time and
+the Spark counters of the last timed pass (jobs, tasks, executor CPU,
+shuffle bytes), read from the session's own event log through
+perfbench/tracing.py. Wall clock is reported as measured; the counters are
+the figures host steal cannot fake.
 
 Each query materializes fully through the noop sink (no driver collect,
 no column-pruning shortcut), timing the plan a cluster would execute.
@@ -12,61 +16,95 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
+import tempfile
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+REPO = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, REPO)
+
+from perfbench.tracing import Tracer, attribute_jobs, event_log_conf, read_jobs  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+PER_QUERY = os.path.join(REPO, "BENCH_PER_QUERY.json")
 
 
-def _host_calibration() -> list[float]:
-    """[single-thread, 16-way-parallel] seconds for a fixed CPU loop
-    (~0.3s/0.4s on a quiet host). The VM shows multi-hour windows where
-    the hypervisor steals cycles (load >15 at 98% idle, same-code
-    queries 4-20x slow — see BASELINE.md round-5 variance note), and the
-    theft can hit PARALLEL load while a single thread still runs at full
-    speed — so both shapes are probed. Recording the calibration
-    alongside the totals lets a reader separate engine cost from host
-    weather."""
+def run_query(spark, tracer: Tracer, name: str, sf_dir: str) -> float:
+    """Run one registered query through the noop sink inside a
+    ``bench.query`` span; return its wall seconds."""
+    from kafka_connect_bigquery_storage_write_spark.queries import QUERIES
 
-    def loop() -> float:
-        t0 = time.perf_counter()
-        s = 0
-        for i in range(5_000_000):
-            s += i * i
-        return time.perf_counter() - t0
-
-    single = loop()
-    from multiprocessing import Pool
-
-    t0 = time.perf_counter()
-    with Pool(16) as p:
-        p.map(_cal_loop, range(16))
-    par = time.perf_counter() - t0
-    return [round(single, 3), round(par, 3)]
+    with tracer.span("bench.query", query=name) as rec:
+        QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+    # queries are independent: drop any relation an operator persisted so
+    # cache residency can't distort the next timings
+    spark.catalog.clearCache()
+    return rec["end"] - rec["start"]
 
 
-def _cal_loop(_):
-    s = 0
-    for i in range(5_000_000):
-        s += i * i
-    return s
+def counters(jobs: list[dict]) -> dict:
+    return {
+        "jobs": len(jobs),
+        "tasks": sum(j["tasks"] for j in jobs),
+        "cpu_ms": round(sum(j["cpu_ms"] for j in jobs), 1),
+        "shuffle_bytes": sum(j["shuffle_bytes"] for j in jobs),
+    }
 
 
-def main() -> None:
-    from kafka_connect_bigquery_storage_write_spark.session import get_spark
-    from kafka_connect_bigquery_storage_write_spark.queries import QUERIES, load_all
+def per_query(spans: list[dict], jobs: list[dict], best: dict[str, float]) -> dict[str, dict]:
+    """BENCH_PER_QUERY.json entries: each query's min wall time plus the
+    counters of its last ``bench.query`` span (a job belongs to the span
+    open when it was submitted)."""
+    attribute_jobs(spans, jobs)
+    last = {s["query"]: s for s in sorted(spans, key=lambda s: s["start"]) if s["name"] == "bench.query"}
+    return {name: {"wall_s": best[name], **counters(last[name]["jobs"])} for name in sorted(best)}
 
-    cal_start = _host_calibration()
 
-    spark = get_spark(app_name="kafka_connect_bigquery_storage_write_spark-bench", cpus=CPUS, shuffle_partitions=CPUS)
-    load_all()
+def top_regressions(prev: dict[str, dict], cur: dict[str, dict], n: int = 5) -> list[dict]:
+    """The ``n`` queries whose executor CPU grew most against ``prev`` (the
+    committed BENCH_PER_QUERY.json), with their job counts before and after."""
+    grown = []
+    for name, c in cur.items():
+        p = prev.get(name)
+        if p is not None and c["cpu_ms"] > p["cpu_ms"]:
+            grown.append((c["cpu_ms"] / max(p["cpu_ms"], 1.0), name, p["jobs"], c["jobs"]))
+    grown.sort(reverse=True)
+    return [{"q": name.split("_")[0], "cpu_x": round(x, 2), "jobs": [a, b]} for x, name, a, b in grown[:n]]
 
-    # warm the JVM/codegen paths the suite uses (parquet scan, hash agg,
-    # broadcast join, window, JSON) so the first timed query doesn't pay
-    # one-time compilation costs
+
+def stdout_line(cur: dict[str, dict], run_totals: list[float], prev: dict[str, dict], sf_dir: str) -> str:
+    """The one JSON line printed to stdout. Per-query values do not ride on
+    it: it carries totals and two bounded digests, so it survives a
+    2000-char tail capture of stdout at any registry size (round-3 and
+    round-7 artifacts were truncated mid-line and unparseable)."""
+    sf = sf_dir.rstrip("/").split("sf")[-1]
+    payload = {
+        "metric": "query_suite_wall_clock",
+        "value": round(sum(e["wall_s"] for e in cur.values()), 3),
+        "unit": "sec",
+        "n_queries": len(cur),
+        "top5": {
+            name.split("_")[0]: round(e["wall_s"], 2)
+            for name, e in sorted(cur.items(), key=lambda kv: -kv[1]["wall_s"])[:5]
+        },
+        "top_regressions": top_regressions(prev, cur),
+        "agg": f"min_of_{len(run_totals)}_runs",
+        "run_totals": run_totals,
+        "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+        "detail": os.path.basename(PER_QUERY),
+    }
+    line = json.dumps(payload, separators=(",", ":"))
+    # fail loudly rather than print a line whose head the capture would cut
+    assert len(line) < 1600, f"bench stdout line {len(line)}B >= 1600B capture budget"
+    return line
+
+
+def _warm(spark) -> None:
+    """Warm the JVM/codegen paths the suite uses (parquet scan, hash agg,
+    broadcast join, window, JSON) so the first timed query doesn't pay
+    one-time compilation costs."""
     from pyspark.sql import functions as F
 
     li = spark.read.parquet(os.path.join(SF_DIR, "lineitem.parquet")).limit(50_000)
@@ -99,341 +137,52 @@ def main() -> None:
         "overwrite"
     ).save()
 
-    # Per-query contention defence (VERDICT r5 #2): the round-5 official
-    # artifact was min-of-1 because a hypervisor-contended first pass blew
-    # the warm-pass budget (699s recorded where the steady state is ~126s;
-    # q88 1.4s->75.2s etc.). The committed BENCH_LOCAL.json carries each
-    # query's last quiet-host min; when a pass measures a query at >3x that
-    # reference (and above an absolute 2s floor, so sub-second jitter never
-    # triggers), the query is retried IMMEDIATELY and the min kept — a
-    # transient steal window then costs one extra query run, not the whole
-    # pass. Retries are capped per pass so a genuinely slow host still
-    # terminates; the count is reported in the payload.
-    ref_mins: dict[str, float] = {}
-    ref_cal: list[float] | None = None
-    _ref: dict = {}
-    repo_dir = os.path.dirname(os.path.abspath(__file__))
-    # per-query implementation fingerprint: the min-merge and the 3x-retry
-    # rule must only reuse a historical minimum measured on the SAME query
-    # source — otherwise a genuine regression can never raise the committed
-    # minimum and the reference drifts from the code being benchmarked
-    # (ADVICE r8). Registered query functions are thin wrappers over the
-    # operators, so their own source is the right invalidation grain:
-    # coarser (whole module) would wipe every sibling's minima on any edit.
-    import hashlib
-    import inspect
 
-    impl_hash: dict[str, str] = {}
-    for _name, _fn in QUERIES.items():
-        try:
-            src = inspect.getsource(_fn)
-        except (OSError, TypeError):
-            src = _name
-        impl_hash[_name] = hashlib.sha1(src.encode()).hexdigest()[:12]
-    try:
-        with open(os.path.join(repo_dir, "BENCH_LOCAL.json")) as f:
-            _ref = json.load(f)
-        _ref_hash = _ref.get("impl_hash", {})
-        ref_mins = {
-            k: float(v)
-            for k, v in _ref.get("queries", {}).items()
-            # a missing stored hash (pre-r9 reference) keeps the min — the
-            # one-time migration stamps hashes on the next healthy persist
-            if _ref_hash.get(k) in (None, impl_hash.get(k))
-        }
-        ref_cal = _ref.get("host_cal_ref")
+def main() -> None:
+    from kafka_connect_bigquery_storage_write_spark.queries import QUERIES, load_all
+    from kafka_connect_bigquery_storage_write_spark.session import get_spark
+
+    try:  # the comparison base for top_regressions, read before the overwrite
+        with open(PER_QUERY) as f:
+            prev = json.load(f)
     except (OSError, ValueError):
-        pass
-    # commit hash of the reference file this run compares against, so the
-    # artifact's comparison base is unambiguous (VERDICT r6 #4)
+        prev = {}
+    tracer = Tracer()
+    log_dir = tempfile.mkdtemp(prefix="bench-events-")
     try:
-        import subprocess
+        spark = get_spark(
+            app_name="kafka_connect_bigquery_storage_write_spark-bench",
+            cpus=CPUS,
+            shuffle_partitions=CPUS,
+            extra_conf=event_log_conf(log_dir),
+        )
+        load_all()
+        _warm(spark)
+        # Two timed passes, reporting the per-query MIN: the min of two
+        # passes is the steady-state cost, and a single cold pass would
+        # bill per-plan JIT/codegen warmup to arbitrary queries. The second
+        # pass is skipped if the first already took 900 s (slow host),
+        # keeping worst-case wall time bounded.
+        def sweep() -> dict[str, float]:
+            return {name: round(run_query(spark, tracer, name, SF_DIR), 3) for name in sorted(QUERIES)}
 
-        ref_commit = subprocess.run(
-            ["git", "-C", repo_dir, "log", "-n", "1", "--format=%h", "--", "BENCH_LOCAL.json"],
-            capture_output=True, text=True, timeout=10,
-        ).stdout.strip() or None
-    except Exception:
-        ref_commit = None
-    retry_count = [0]
-    MAX_RETRIES_PER_PASS = 20
+        bench_start = time.perf_counter()
+        runs = [sweep()]
+        if time.perf_counter() - bench_start < 900:
+            runs.append(sweep())
+        log = os.path.join(log_dir, spark.sparkContext.applicationId)
+        spark.stop()  # flushes and closes the event log
+        log_mb = os.path.getsize(log) / 1e6
+        jobs = read_jobs(log)
+    finally:
+        shutil.rmtree(log_dir, ignore_errors=True)
 
-    def sweep(sf_dir: str) -> dict[str, float]:
-        timings: dict[str, float] = {}
-
-        def run_once(name: str) -> float:
-            t0 = time.perf_counter()
-            df = QUERIES[name](spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            elapsed = time.perf_counter() - t0
-            # queries are independent: drop any relation an operator
-            # persisted so cache residency can't distort the next timings
-            spark.catalog.clearCache()
-            return elapsed
-
-        retries_left = MAX_RETRIES_PER_PASS
-        for name in sorted(QUERIES):
-            t = run_once(name)
-            ref = ref_mins.get(name)
-            if ref is not None and retries_left > 0 and t > max(3.0 * ref, 2.0):
-                retries_left -= 1
-                retry_count[0] += 1
-                t = min(t, run_once(name))
-            timings[name] = round(t, 3)
-        return timings
-
-    # Two timed passes, reporting the per-query MIN. The host this suite
-    # runs on shows large transient noise (same-code totals measured
-    # 81s..174s; individual 1.4s queries spiking to 15s — see BASELINE.md
-    # round-2 variance analysis), and a single cold pass also bills
-    # per-plan JIT/codegen warmup to arbitrary queries. The min of two
-    # passes is the engine's steady-state cost — the quantity that scales
-    # with a cluster — while the raw pass totals stay in the JSON for
-    # transparency. The second pass is skipped if the first already blew
-    # the budget (slow host), keeping worst-case wall time bounded. (A
-    # small-SF warm sweep was tried instead and rejected: 62 queries x
-    # ~1.5s fixed overhead costs more than the cold effects it removes.)
-    bench_start = time.perf_counter()
-    runs = [sweep(SF_DIR)]
-    # budget raised from 240s with the round-5 registry growth (107
-    # queries): a noisy first pass must not disable the warm pass, or the
-    # reported number is all cold-start noise (a 383s min-of-1 was
-    # recorded where the warm suite runs ~90s). Raised again to 900s at
-    # 229 queries (round 12): under moderate steal the first pass runs
-    # 450-550s, and a min-of-1 there is all weather — the warm second
-    # pass is exactly what the min-merge needs most on contended days.
-    if time.perf_counter() - bench_start < 900:
-        runs.append(sweep(SF_DIR))
-
-    best = {name: min(r[name] for r in runs) for name in runs[0]}
-    total = round(sum(best.values()), 3)
-    cal_end = _host_calibration()
-    # Host-normalized total (VERDICT r5 #2): scale by the HOST'S OWN
-    # quiet-window reference calibration over the observed average. The
-    # reference lives in BENCH_LOCAL.json ("host_cal_ref", stamped by the
-    # last healthy run on THIS host — ADVICE r6: hard-coded constants from
-    # one machine made the normalized number a modeled figure elsewhere);
-    # first run on a fresh host falls back to the observed values
-    # themselves (factor 1.0 — no normalization claim without a local
-    # reference). The BINDING constraint is the worse of the two ratios —
-    # hypervisor theft can hit parallel load while a single thread still
-    # runs at full speed (the documented signature), and a healthy
-    # single-thread cal must not mask it. Capped at 1x: normalization
-    # corrects for a slow window, it must not award bonus speed on a fast
-    # host. The RAW total stays the primary "value" headline.
-    obs_single = (cal_start[0] + cal_end[0]) / 2
-    obs_par = (cal_start[1] + cal_end[1]) / 2
-    cal_ref = ref_cal if ref_cal else [obs_single, obs_par]
-    factor = min(1.0, cal_ref[0] / max(obs_single, 1e-9), cal_ref[1] / max(obs_par, 1e-9))
-    # Normalization factor for the min-of-N headline (VERDICT r12 #1): the
-    # per-query values are MINIMA across passes, so when one pass was badly
-    # stolen the recorded times come predominantly from the healthier pass —
-    # averaging both calibration windows then DOUBLE-corrects (r12: avg
-    # factor 0.34 claimed 96s where the healthy-window passes measured
-    # 204-227s). The defensible bound is the BEST single calibration
-    # window's factor: the run demonstrably contained a window that quiet,
-    # and min-merge means the minima are no worse than that window's
-    # weather. The conservative AVERAGED factor above still gates
-    # BENCH_LOCAL persistence (a half-stolen run must not persist minima).
-    factor_norm = min(
-        1.0,
-        max(
-            min(1.0, cal_ref[0] / max(c[0], 1e-9), cal_ref[1] / max(c[1], 1e-9))
-            for c in (cal_start, cal_end)
-        ),
-    )
-
-    # --- reference-epoch policy (VERDICT r13 #4; amended round 14) ---
-    # The SINGLE-THREAD calibration floor has been pinned 22-30% above
-    # the round-9 reference for five rounds (best windows 0.283-0.300 vs
-    # 0.231, NEVER once below 0.283 in ~60 windows since r10 — under
-    # random steal a quiet single would occasionally appear, as r10's
-    # 0.223 did), while the PARALLEL shape still reaches near-reference
-    # in quiet windows (r14: 0.362 vs 0.335 ref; even r10's
-    # healthy-single round measured 0.367). That shape-split is the
-    # signature of a structural single-thread baseline shift
-    # (clock/turbo) with ordinary parallel weather on top — NOT global
-    # steal, which slows both shapes together. Under it the 0.85
-    # persistence factor is permanently unreachable and the
-    # min-reference discipline silently becomes "never persist again".
-    # Policy: a CONFIRMING run has its best single window > 1.2x
-    # reference (stable within +-10% of the streak's floor) WHILE its
-    # best parallel window is <= 1.15x reference (a stolen host cannot
-    # run 16-way near reference). At STREAK_N consecutive confirming
-    # runs, the reference retires into host_cal_ref_epochs (provenance:
-    # ref, minima, streak evidence); the single-thread reference
-    # restarts at the streak's floor, the parallel reference is KEPT
-    # (it was never the shifted shape), and per-query minima restart
-    # under the new epoch. A quiet single window (<= 1.1x ref) resets
-    # the streak; a globally-slow run is weather and leaves it
-    # unchanged.
-    STREAK_N = 2
-    obs_best = [min(cal_start[0], cal_end[0]), min(cal_start[1], cal_end[1])]
-    streak = _ref.get("shift_streak") or {"n": 0, "best": None}
-    epoch_rolled = False
-    confirmed_this_run = False  # the roll needs THIS run to confirm the split
-    if ref_cal:
-        if factor_norm >= 0.85 or obs_best[0] <= 1.1 * cal_ref[0]:
-            streak = {"n": 0, "best": None}
-        elif not (obs_best[0] > 1.2 * cal_ref[0] and obs_best[1] <= 1.15 * cal_ref[1]):
-            pass  # globally-slow window: weather, evidence of nothing
-        elif streak.get("best") is None:
-            streak = {"n": 1, "best": [round(obs_best[0], 3), round(obs_best[1], 3)]}
-            confirmed_this_run = True
-        else:
-            r0 = obs_best[0] / max(streak["best"][0], 1e-9)
-            if r0 < 0.90:
-                # a meaningfully lower single floor: restart the count there
-                streak = {"n": 1, "best": [round(obs_best[0], 3), round(obs_best[1], 3)]}
-                confirmed_this_run = True
-            elif r0 <= 1.10:
-                streak = {
-                    "n": streak["n"] + 1,
-                    "best": [
-                        round(min(streak["best"][0], obs_best[0]), 3),
-                        round(min(streak["best"][1], obs_best[1]), 3),
-                    ],
-                }
-                confirmed_this_run = True
-        if streak["n"] >= STREAK_N and confirmed_this_run:
-            epochs = _ref.get("host_cal_ref_epochs", [])
-            epochs.append(
-                {
-                    "host_cal_ref": cal_ref,
-                    "queries": _ref.get("queries", {}),
-                    "impl_hash": _ref.get("impl_hash", {}),
-                    "retired_after_commit": ref_commit,
-                    "streak_evidence": streak,
-                    "reason": (
-                        f"single-thread floor stable > 1.2x reference across {streak['n']} "
-                        "consecutive confirming runs while the parallel shape reached "
-                        "<= 1.15x reference — structural single-thread baseline shift, "
-                        "not steal (BASELINE.md epoch policy)"
-                    ),
-                }
-            )
-            # the parallel shape was never shifted: keep its reference
-            cal_ref = ref_cal = [streak["best"][0], cal_ref[1]]
-            ref_mins = {}
-            _ref = {**_ref, "host_cal_ref_epochs": epochs, "queries": {}, "impl_hash": {}}
-            streak = {"n": 0, "best": None}
-            epoch_rolled = True
-            # re-derive the factors against the new epoch's reference
-            factor = min(1.0, cal_ref[0] / max(obs_single, 1e-9), cal_ref[1] / max(obs_par, 1e-9))
-            factor_norm = min(
-                1.0,
-                max(
-                    min(1.0, cal_ref[0] / max(c[0], 1e-9), cal_ref[1] / max(c[1], 1e-9))
-                    for c in (cal_start, cal_end)
-                ),
-            )
-
-    sf = SF_DIR.rstrip("/").split("sf")[-1]
-    payload = {
-        "metric": "query_suite_wall_clock",
-        "value": total,
-        "unit": "sec",
-        # stdout JSON must survive the driver's 2000-char tail capture
-        # (round-3 and round-7 artifacts were truncated mid-line and
-        # unparseable once per-query detail outgrew the window). Per-query
-        # timings therefore do NOT ride on stdout at all: stdout carries
-        # totals + calibration + a bounded top-5-slowest digest (~500B,
-        # safe at any registry size), and the full-name 3dp per-query
-        # detail goes to the committed BENCH_LOCAL.json alongside bench.py.
-        "n_queries": len(best),
-        "top5": {name.split("_")[0]: round(t, 2)
-                 for name, t in sorted(best.items(), key=lambda kv: -kv[1])[:5]},
-        "agg": f"min_of_{len(runs)}_runs",
-        "run_totals": [round(sum(r.values()), 3) for r in runs],
-        # per-query immediate retries triggered by the >3x-reference-min
-        # contention rule (see sweep()); non-zero means the host stole
-        # cycles mid-pass and the retried minima repaired the artifact
-        "contention_retries": retry_count[0],
-        # [single-thread, 16-way] CPU loop seconds at bench start/end
-        # (~0.30s/0.40s quiet host; larger = hypervisor contention window,
-        # totals inflated). host_cal_norm_total = value scaled by the
-        # quiet-host/observed calibration ratio (capped at 1x) — the
-        # contention-corrected headline a reader should compare across
-        # rounds when host_cal shows theft.
-        "host_cal": [cal_start, cal_end],
-        "host_cal_ref": cal_ref,
-        "host_cal_norm_total": round(total * factor_norm, 3),
-        "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-        "detail": "BENCH_LOCAL.json",
-        # commit that last touched the reference minima being compared
-        # against (null on a fresh checkout / no git)
-        "ref_commit": ref_commit,
-        # reference-epoch policy state: how many baselines this host has
-        # retired (BASELINE.md epoch policy), and whether THIS run rolled
-        "cal_epoch": len(_ref.get("host_cal_ref_epochs", [])),
-        "epoch_rolled": epoch_rolled,
-    }
-    detail = dict(payload)
-    # per-query MIN rule across history: a contended window can only fail
-    # to tighten a min, never inflate one — merge this run's minima with
-    # the committed reference so BENCH_LOCAL accumulates the steady state
-    # (queries renamed/removed from the registry drop out; new ones enter)
-    # (ref_mins already excludes queries whose implementation hash changed,
-    # so a regressed rewrite starts a fresh minimum instead of inheriting
-    # the old implementation's number)
-    detail["queries"] = {k: min(v, ref_mins[k]) if k in ref_mins else v for k, v in best.items()}
-    detail["value"] = round(sum(detail["queries"].values()), 3)
-    detail["impl_hash"] = impl_hash
-    detail["shift_streak"] = streak
-    if _ref.get("host_cal_ref_epochs"):
-        detail["host_cal_ref_epochs"] = _ref["host_cal_ref_epochs"]
-    # BENCH_LOCAL.json is the committed steady-state reference the retry
-    # rule reads — a contended run must NOT overwrite it with inflated
-    # minima (observed: a theft window wrote q122=128.6s where the steady
-    # state is 7.3s, which would disarm every future 3x-retry check).
-    # Overwrite only when the host calibration was healthy end to end.
-    local_path = os.path.join(repo_dir, "BENCH_LOCAL.json")
-    # EVERY run's full detail also lands in a sidecar (overwrite-always,
-    # health flag included): stdout no longer carries per-query values
-    # (capture bound) and a contended run must not persist to
-    # BENCH_LOCAL, so without this file an all-day steal window would
-    # leave no per-query evidence to min-merge from (the r7 methodology:
-    # minima across contended runs can only fail to tighten)
-    with open(os.path.join(repo_dir, "BENCH_RUN_LAST.json"), "w") as f:
-        json.dump({**dict(payload), "queries": best, "impl_hash": impl_hash, "healthy": factor >= 0.85}, f, indent=1)
-    if factor >= 0.85 or not os.path.exists(local_path):
-        # the persisted reference calibration tracks the QUIETEST window
-        # ever observed on this host — WITHIN the current epoch — (min per
-        # shape), so the retry/normalize thresholds keep tightening toward
-        # the host's true steady state
-        detail["host_cal_ref"] = [round(min(a, b), 3) for a, b in zip(cal_ref, obs_best)] if ref_cal else [
-            round(v, 3) for v in obs_best
-        ]
-        with open(local_path, "w") as f:
-            json.dump(detail, f, indent=1)
-    else:
-        payload["detail"] = "BENCH_LOCAL.json (stale: contended run not persisted)"
-        # streak/epoch bookkeeping must survive contended runs — under a
-        # shifted baseline healthy runs never happen, which is exactly
-        # when the policy has to act. Update ONLY the epoch-policy fields
-        # of the committed reference; minima stay untouched (an epoch
-        # roll restarts them explicitly).
-        try:
-            with open(local_path) as f:
-                cur = json.load(f)
-            if cur.get("shift_streak") != streak or epoch_rolled:
-                cur["shift_streak"] = streak
-                if epoch_rolled:
-                    cur["host_cal_ref_epochs"] = _ref["host_cal_ref_epochs"]
-                    cur["host_cal_ref"] = [round(v, 3) for v in cal_ref]
-                    cur["queries"] = {}
-                    cur["impl_hash"] = {}
-                    cur["value"] = None
-                with open(local_path, "w") as f:
-                    json.dump(cur, f, indent=1)
-        except (OSError, ValueError):
-            pass
-    line = json.dumps(payload, separators=(",", ":"))
-    # hard guarantee against the round-3/round-7 truncation class: the
-    # driver captures the LAST 2000 chars of stdout, so an oversized line
-    # loses its head and parses as null — fail loudly here instead
-    assert len(line) < 1600, f"bench stdout line {len(line)}B >= 1600B capture budget"
-    print(line, flush=True)
+    cur = per_query(tracer.spans, jobs, {name: min(r[name] for r in runs) for name in runs[0]})
+    with open(PER_QUERY, "w") as f:
+        json.dump(cur, f, indent=1)
+    outside = len(jobs) - sum(len(s["jobs"]) for s in tracer.spans)
+    print(f"bench: event log {log_mb:.1f} MB, {len(jobs)} jobs, {outside} outside any query span", file=sys.stderr)
+    print(stdout_line(cur, [round(sum(r.values()), 3) for r in runs], prev, SF_DIR), flush=True)
 
 
 if __name__ == "__main__":

@@ -14,6 +14,7 @@ import zipfile
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+WINDOW_EXEC_LOGGER = "org.apache.spark.sql.execution.window.WindowExec"
 
 # Spark applicationIds that already received the package zip via addPyFile.
 # Keyed by applicationId, NOT id(sc): CPython reuses object ids after GC, so
@@ -137,5 +138,12 @@ def get_spark(
             builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    # every bounded global window (allowlisted in test_plans/test_window_lint)
+    # logs "No Partition Defined" on each run; the tests guard the property,
+    # so the warning flood only buries real signal in the logs
+    jvm = spark.sparkContext._jvm
+    jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
+        WINDOW_EXEC_LOGGER, jvm.org.apache.logging.log4j.Level.ERROR
+    )
     ensure_shipped(spark)
     return spark

@@ -113,3 +113,16 @@ def test_no_unbounded_global_windows(query_surface):
         "unpartitioned window over a non-whitelisted relation (single-task "
         f"bottleneck at scale): {offenders}"
     )
+
+
+def test_get_spark_quiets_window_exec_warning(spark):
+    """get_spark raises the WindowExec logger to ERROR, so the allowlisted
+    bounded global windows stop flooding the bench log with `No Partition
+    Defined`; the lint above is what guards the property itself."""
+    from kafka_connect_bigquery_storage_write_spark.session import WINDOW_EXEC_LOGGER, get_spark
+
+    log4j = spark.sparkContext._jvm.org.apache.logging.log4j
+    log4j.core.config.Configurator.setLevel(WINDOW_EXEC_LOGGER, log4j.Level.WARN)
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert get_spark(app_name=spark.sparkContext.appName, cpus=n, shuffle_partitions=n) is spark
+    assert str(log4j.LogManager.getLogger(WINDOW_EXEC_LOGGER).getLevel()) == "ERROR"

@@ -11,7 +11,7 @@ deterministic, so the numbers are valid under any host weather.
 Probes:
   graph N_EDGES   pagerank + min-label CC on a synthetic power-law-ish
                   graph (default 2M edges / 200k vertices, ~10x the
-                  sf0.1 coactivity graph): per-job shuffle read/write
+                  sf0.1 coactivity graph): per-job shuffle read+write
                   bytes for the iteration jobs, split into the one-time
                   edge partitioning vs the per-round cost.
   cdc N_COMMITS   a manifest sink with one seed + N upsert commits
@@ -26,78 +26,37 @@ Writes a summary to stdout; paste into SCALING.md.
 
 from __future__ import annotations
 
-import json
 import os
+import shutil
 import sys
 import tempfile
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from perfbench.tracing import Tracer, attribute_jobs, event_log_conf, read_jobs  # noqa: E402
 
 
 def _spark(evdir: str):
     from kafka_connect_bigquery_storage_write_spark.session import get_spark
 
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", 32))
-    return get_spark(
-        app_name="scale-shape-probe",
-        cpus=cpus,
-        shuffle_partitions=cpus,
-        extra_conf={
-            "spark.eventLog.enabled": "true",
-            "spark.eventLog.dir": f"file://{evdir}",
-            "spark.eventLog.compress": "false",
-            "spark.eventLog.rolling.enabled": "false",
-        },
-    )
+    return get_spark(app_name="scale-shape-probe", cpus=cpus, shuffle_partitions=cpus, extra_conf=event_log_conf(evdir))
 
 
-def _job_metrics(evpath: str) -> list[dict]:
-    """Per-job {desc, shuffle_read_b, shuffle_write_b, dur_ms} from the
-    event log (stage metrics attributed to their job)."""
-    jobs: dict[int, dict] = {}
-    stage_to_job: dict[int, int] = {}
-    with open(evpath) as f:
-        for line in f:
-            try:
-                ev = json.loads(line)
-            except ValueError:
-                continue
-            e = ev.get("Event")
-            if e == "SparkListenerJobStart":
-                jid = ev["Job ID"]
-                jobs[jid] = {
-                    "desc": ev.get("Properties", {}).get("spark.job.description", ""),
-                    "sr": 0,
-                    "sw": 0,
-                    "start": ev["Submission Time"],
-                    "end": None,
-                }
-                for sid in ev.get("Stage IDs", []):
-                    stage_to_job[sid] = jid
-            elif e == "SparkListenerJobEnd":
-                if ev["Job ID"] in jobs:
-                    jobs[ev["Job ID"]]["end"] = ev["Completion Time"]
-            elif e == "SparkListenerStageCompleted":
-                si = ev.get("Stage Info", {})
-                jid = stage_to_job.get(si.get("Stage ID"))
-                if jid is None:
-                    continue
-                # formatted task-metric totals live in the accumulables
-                for acc in si.get("Accumulables", []):
-                    if acc.get("Name") == "internal.metrics.shuffle.read.remoteBytesRead":
-                        jobs[jid]["sr"] += int(acc.get("Value", 0))
-                    elif acc.get("Name") == "internal.metrics.shuffle.read.localBytesRead":
-                        jobs[jid]["sr"] += int(acc.get("Value", 0))
-                    elif acc.get("Name") == "internal.metrics.shuffle.write.bytesWritten":
-                        jobs[jid]["sw"] += int(acc.get("Value", 0))
-    return [jobs[k] for k in sorted(jobs)]
+def _span_jobs(spark, evdir: str, tracer: Tracer) -> dict[str, list[dict]]:
+    """Stop the session and return each span's finished jobs, by span name
+    (event-log parsing and attribution are perfbench/tracing.py's)."""
+    app_id = spark.sparkContext.applicationId
+    spark.stop()
+    jobs = read_jobs(os.path.join(evdir, app_id))
+    shutil.rmtree(evdir, ignore_errors=True)
+    attribute_jobs(tracer.spans, jobs)
+    return {s["name"]: [j for j in s["jobs"] if j["end"]] for s in tracer.spans}
 
 
 def probe_graph(n_edges: int) -> None:
     evdir = tempfile.mkdtemp(prefix="spark-events-shape-")
     spark = _spark(evdir)
-    sc = spark.sparkContext
     from pyspark.sql import functions as F
 
     from kafka_connect_bigquery_storage_write_spark.operators.dedup import connected_components
@@ -117,41 +76,33 @@ def probe_graph(n_edges: int) -> None:
     sym = sym.localCheckpoint(eager=True)
     m = sym.count()
 
-    sc.setJobDescription("PROBE::pagerank")
-    t0 = time.perf_counter()
-    pr = pagerank_integer(sym, iterations=5, symmetric=True)
-    pr.write.format("noop").mode("overwrite").save()
-    t_pr = time.perf_counter() - t0
+    tracer = Tracer()
+    with tracer.span("PROBE::pagerank") as rec_pr:
+        pr = pagerank_integer(sym, iterations=5, symmetric=True)
+        pr.write.format("noop").mode("overwrite").save()
 
-    sc.setJobDescription("PROBE::cc_min_label")
-    t0 = time.perf_counter()
-    cc = connected_components(
-        sym.select(F.col("src").alias("id_a"), F.col("dst").alias("id_b")), "id_a", "id_b"
-    )
-    cc.write.format("noop").mode("overwrite").save()
-    t_cc = time.perf_counter() - t0
-    sc.setJobDescription(None)
+    with tracer.span("PROBE::cc_min_label") as rec_cc:
+        cc = connected_components(
+            sym.select(F.col("src").alias("id_a"), F.col("dst").alias("id_b")), "id_a", "id_b"
+        )
+        cc.write.format("noop").mode("overwrite").save()
 
-    app_id = sc.applicationId
-    spark.stop()
-    jm = _job_metrics(os.path.join(evdir, app_id))
-    for tag, wall in (("PROBE::pagerank", t_pr), ("PROBE::cc_min_label", t_cc)):
-        mine = [j for j in jm if j["desc"] == tag and j["end"]]
-        tot_sr = sum(j["sr"] for j in mine)
-        tot_sw = sum(j["sw"] for j in mine)
-        big = sorted(mine, key=lambda j: -(j["sr"] + j["sw"]))[:6]
-        print(f"\n{tag}: edges(sym,distinct)={m:,}  vertices~{n_vertices:,}  "
-              f"jobs={len(mine)} wall={wall:.1f}s")
-        print(f"  total shuffle read={tot_sr/1e6:.1f} MB  write={tot_sw/1e6:.1f} MB")
-        print("  heaviest jobs (read/write MB):")
+    by_span = _span_jobs(spark, evdir, tracer)
+    for rec in (rec_pr, rec_cc):
+        mine = by_span[rec["name"]]
+        big = sorted(mine, key=lambda j: -j["shuffle_bytes"])[:6]
+        print(f"\n{rec['name']}: edges(sym,distinct)={m:,}  vertices~{n_vertices:,}  "
+              f"jobs={len(mine)} wall={rec['end'] - rec['start']:.1f}s")
+        print(f"  total shuffle read+write={sum(j['shuffle_bytes'] for j in mine)/1e6:.1f} MB  "
+              f"tasks={sum(j['tasks'] for j in mine)}  executor cpu={sum(j['cpu_ms'] for j in mine)/1e3:.1f}s")
+        print("  heaviest jobs (shuffle read+write MB):")
         for j in big:
-            print(f"    {j['sr']/1e6:8.2f} / {j['sw']/1e6:8.2f}   dur={(j['end']-j['start'])/1000:.2f}s")
+            print(f"    {j['shuffle_bytes']/1e6:8.2f}   dur={(j['end']-j['start'])/1000:.2f}s")
 
 
 def probe_cdc(n_commits: int) -> None:
     evdir = tempfile.mkdtemp(prefix="spark-events-shape-")
     spark = _spark(evdir)
-    sc = spark.sparkContext
     from pyspark.sql import functions as F
 
     from kafka_connect_bigquery_storage_write_spark.sinks.cdf_consumer import ChangeFeedConsumer
@@ -175,23 +126,17 @@ def probe_cdc(n_commits: int) -> None:
 
     tgt = ManifestSinkTable(f"{root}/b", write_mode="committed")
     c = ChangeFeedConsumer(src_t, tgt, keys=["k"], checkpoint_dir=f"{root}/ck")
-    sc.setJobDescription("PROBE::cdc_drain")
-    t0 = time.perf_counter()
-    applied = c.run_available_now(spark)
-    wall = time.perf_counter() - t0
-    sc.setJobDescription(None)
+    tracer = Tracer()
+    with tracer.span("PROBE::cdc_drain") as rec:
+        applied = c.run_available_now(spark)
     merge_markers = [
         f for f in os.listdir(os.path.join(f"{root}/b", "_commits")) if f.startswith("mrgop-")
     ]
-    app_id = sc.applicationId
-    spark.stop()
-    jm = _job_metrics(os.path.join(evdir, app_id))
-    mine = [j for j in jm if j["desc"] == "PROBE::cdc_drain" and j["end"]]
+    mine = _span_jobs(spark, evdir, tracer)["PROBE::cdc_drain"]
     print(f"\nPROBE::cdc_drain: commits={applied} (seed + {n_commits} upserts)  "
-          f"jobs={len(mine)}  wall={wall:.1f}s")
+          f"jobs={len(mine)}  wall={rec['end'] - rec['start']:.1f}s")
     print(f"  merge passes on the mirror: {len(merge_markers)} ({sorted(merge_markers)})")
-    print(f"  total shuffle read={sum(j['sr'] for j in mine)/1e6:.1f} MB  "
-          f"write={sum(j['sw'] for j in mine)/1e6:.1f} MB")
+    print(f"  total shuffle read+write={sum(j['shuffle_bytes'] for j in mine)/1e6:.1f} MB")
 
 
 def main() -> None:
