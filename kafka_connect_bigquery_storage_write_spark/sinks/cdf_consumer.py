@@ -161,12 +161,13 @@ class ChangeFeedConsumer:
         after = int(cur["after_batch_id"])
         done_dvs = set(cur["applied_dvs"])
         work: list[tuple[int, str, int]] = []
+        state = self.source._list_state()
         logged = self.source._change_commits()
-        batch_ids = set(self.source._committed_entries()) | set(logged)
+        batch_ids = set(state.committed) | set(logged)
         for b in sorted(batch_ids):
             if b > after:
                 work.append((b, "batch", b))
-        for i, d in sorted(self.source._dv_commits().items()):
+        for i, d in sorted(state.dv_commits.items()):
             if d.get("mor"):
                 continue  # mechanism DV of a MOR upsert — the batch itself
                 # is the change set (applied above as an 'upsert')
@@ -310,10 +311,9 @@ class ChangeFeedConsumer:
     def _source_position(self) -> tuple[int, frozenset[int]]:
         """(max committed/change batch id, non-mor DV indexes) — the feed
         position a freshly read table state corresponds to."""
-        ids = set(self.source._marker_ids()) | set(self.source._change_commits())
-        dvs = frozenset(
-            i for i, d in self.source._dv_commits().items() if not d.get("mor")
-        )
+        state = self.source._list_state()
+        ids = set(state.committed) | set(self.source._change_commits())
+        dvs = frozenset(i for i, d in state.dv_commits.items() if not d.get("mor"))
         return max(ids, default=-1), dvs
 
     def bootstrap(self, spark: SparkSession) -> int:

@@ -477,6 +477,41 @@ def _entry_may_match(entry: dict, where: list[tuple] | None) -> bool:
     return True
 
 
+@dataclass(frozen=True)
+class _TableState:
+    """One validated listing of a sink table's commit log
+    (``ManifestSinkTable._list_state``). Every reader, rewriter,
+    tombstone publisher, vacuum and change-feed consumer decides from
+    exactly one of these — never from a second listing.
+
+    snap          latest snapshot, None before the first rewrite
+    dv_commits    the DV log (``_dv_commits``; staged DVs annotated)
+    committed     batch id -> ``{"dir", "files"}`` of every committed
+                  batch (markers, epochs and live MOR inserts, absorbed
+                  ids included); ``"mor": True`` marks merge batches
+    staged        batch id -> manifest of every staged marker
+    staged_mor    batch id -> insert manifest of every staged-unpublished
+                  MOR upsert (lowest dv index wins)
+    absorbed      batch ids the snapshot absorbed
+    manifests     visible manifests: the snapshot's compacted dirs, then
+                  the committed batches it has not absorbed
+    batch_ids     sorted ids of those unabsorbed committed batches
+    dvs           live DV commits the snapshot has not absorbed
+    staged_open   indexes of staged-unpublished DVs (an open transaction)
+    """
+
+    snap: dict | None
+    dv_commits: dict[int, dict]
+    committed: dict[int, dict]
+    staged: dict[int, dict]
+    staged_mor: dict[int, dict]
+    absorbed: frozenset[int]
+    manifests: list[dict]
+    batch_ids: list[int]
+    dvs: list[dict]
+    staged_open: list[int]
+
+
 @dataclass
 class ManifestSinkTable:
     root: str
@@ -576,53 +611,33 @@ class ManifestSinkTable:
             int(f.split(".")[0]) for f in os.listdir(os.path.join(self.root, "_staged")) if f.endswith(".marker")
         )
 
+    def _log_position(self) -> tuple[int, int]:
+        """(latest snapshot index, latest epoch index), -1 before the
+        first of each. Numeric: 'snapshot-10.json' must beat
+        'snapshot-9.json'."""
+        last = {"snapshot-": -1, "epoch-": -1}
+        for f in os.listdir(os.path.join(self.root, "_commits")):
+            for kind in last:
+                if f.startswith(kind) and f.endswith(".json"):
+                    last[kind] = max(last[kind], int(f[len(kind) : -len(".json")]))
+        return last["snapshot-"], last["epoch-"]
+
     def _latest_snapshot(self) -> dict | None:
-        # numeric sort: 'snapshot-10.json' must beat 'snapshot-9.json'
-        # (lexicographic order would pick a stale snapshot from index 10 on)
-        idx = [
-            int(f[len("snapshot-") : -len(".json")])
-            for f in os.listdir(os.path.join(self.root, "_commits"))
-            if f.startswith("snapshot-") and f.endswith(".json")
-        ]
-        if not idx:
+        n = self._log_position()[0]
+        if n < 0:
             return None
-        with open(os.path.join(self.root, "_commits", f"snapshot-{max(idx)}.json")) as fh:
+        with open(os.path.join(self.root, "_commits", f"snapshot-{n}.json")) as fh:
             return json.load(fh)
 
-    def _snapshot_state(self) -> tuple[list[str], set[int]]:
-        """(compacted data dirs, absorbed micro-batch ids) of the latest
-        snapshot. Absorption is an explicit id set, never a watermark, so
-        fresh micro-batch ids can never collide with compaction state."""
-        snap = self._latest_snapshot()
-        if not snap:
-            return [], set()
-        return list(snap["compacted_dirs"]), set(snap["absorbed_batch_ids"])
-
-    @staticmethod
-    def _legacy_dir(batch_id: int) -> str:
-        """Pre-attempt-layout data dir for a batch (markers written before
-        the attempt= scheme carried only {"batch_id"} / {"batch_ids"};
-        their data lives directly under batch=<id>). Reading them through
-        this fallback keeps old tables readable with no migration."""
-        return f"batch={batch_id}"
-
-    def _committed_manifests(self, dv_commits: dict[int, dict] | None = None) -> dict[int, dict]:
-        """Every committed micro-batch id -> its manifest
-        ``{"dir": <rel>, "files": [...] | None}`` (files carry the
-        data-skipping stats; None for legacy markers/epochs written before
-        stats existed — readers then list the dir and skip nothing), from
-        batch markers + epoch files. Markers survive compaction, so the id
-        set keeps absorbed replays idempotent without any watermark over
-        the shared id space.
-
-        ``dv_commits``: callers that also consume the delete-vector log
-        MUST pass their own ``_dv_commits()`` listing so the MOR insert
-        manifests merged below come from the SAME snapshot of the log —
-        two separate listings let an ``upsert_mor`` CAS land in between,
-        making a rewrite absorb the batch's insert rows WITHOUT its
-        tombstones (duplicates baked in, then the void-repair recompute
-        tombstones the batch's own rewritten rows: silent key loss —
-        ADVICE r11)."""
+    def _committed_manifests(self) -> dict[int, dict]:
+        """Batch markers and epochs: every committed micro-batch id -> its
+        manifest ``{"dir": <rel>, "files": [...]}`` (files carry the
+        data-skipping stats), ``"mor": True`` on the merge batches an
+        epoch published (its ``mor_batch_ids``, stamped at publish, so
+        change-feed typing travels with the publish). Markers survive
+        compaction, so the id set keeps absorbed replays idempotent
+        without any watermark over the shared id space. MOR upserts
+        published through a DV commit join in ``_list_state``."""
         entries: dict[int, dict] = {}
         mor_bids: set[int] = set()
         commits = os.path.join(self.root, "_commits")
@@ -630,123 +645,16 @@ class ManifestSinkTable:
             if f.startswith("batch-") and f.endswith(".marker"):
                 with open(os.path.join(commits, f)) as fh:
                     m = json.load(fh)
-                bid = int(m["batch_id"])
-                entries[bid] = {"dir": m.get("dir", self._legacy_dir(bid)), "files": m.get("files")}
+                entries[int(m["batch_id"])] = {"dir": m["dir"], "files": m["files"]}
             elif f.startswith("epoch-") and f.endswith(".json"):
                 with open(os.path.join(commits, f)) as fh:
                     e = json.load(fh)
                 mor_bids.update(int(b) for b in e.get("mor_batch_ids", []))
-                if "dirs" in e:
-                    for bid, d in e["dirs"].items():
-                        entries[int(bid)] = {"dir": d, "files": (e.get("files") or {}).get(bid)}
-                else:  # legacy epoch: {"batch_ids": [...]} only
-                    for bid in e["batch_ids"]:
-                        entries[int(bid)] = {"dir": self._legacy_dir(int(bid)), "files": None}
-        # merge-on-read upserts publish their insert rows THROUGH the DV
-        # commit (one CAS makes tombstones and inserts visible together);
-        # a marker/epoch entry for the same id wins, and between two MOR
-        # publishes of one batch id (racing zombie replays) the LOWEST dv
-        # index wins deterministically (_mor_insert_manifests is sorted)
-        dvc = dv_commits if dv_commits is not None else self._dv_commits()
-        for bid, m in self._mor_insert_manifests(dvc).items():
-            entries.setdefault(bid, m)
-        # "mor" typing rides each ENTRY so change-feed typing and the
-        # entry itself come from one coherent listing (round-13 review:
-        # a commit() epoch rename landing between a DV-log read and the
-        # marker/epoch read otherwise typed merge batches 'insert' —
-        # mirrored consumers would append duplicates instead of merging).
-        # Sources: the epoch's own mor_batch_ids (stamped at publish) and
-        # every dv commit carrying an insert — UNFILTERED by staged-
-        # visibility, so pre-mor_batch_ids epochs still type correctly.
-        for d in dvc.values():
-            ins = d.get("insert")
-            if ins:
-                mor_bids.add(int(ins["batch_id"]))
+                for bid, d in e["dirs"].items():
+                    entries[int(bid)] = {"dir": d, "files": e["files"][bid]}
         for bid in mor_bids & set(entries):
             entries[bid]["mor"] = True
         return entries
-
-    def _mor_insert_manifests(self, dv_commits: dict[int, dict] | None = None) -> dict[int, dict]:
-        """batch id -> insert manifest for every MOR upsert published via a
-        DV commit (``upsert_mor``), lowest dv index winning per batch id."""
-        out: dict[int, dict] = {}
-        if dv_commits is None:
-            dv_commits = self._dv_commits()
-        for _i, d in sorted(dv_commits.items()):
-            ins = d.get("insert")
-            # a staged pending-mode upsert's insert is invisible until its
-            # epoch publishes — same switch as its tombstones (_dv_live)
-            if ins and self._dv_live(d) and int(ins["batch_id"]) not in out:
-                out[int(ins["batch_id"])] = {"dir": ins["dir"], "files": ins.get("files")}
-        return out
-
-    def _mor_void_dvs(self, batch_id: int) -> list[int]:
-        """MOR DV indexes for ``batch_id`` that are VOID: neither absorbed
-        by a snapshot, nor fully visible by basename, nor already covered
-        by a completed repair (``morfix-`` marker) — the signature of the
-        publish-then-crash-into-a-racing-rewrite window, where superseded
-        versions have resurrected. Every rewrite path either absorbs the
-        DVs it saw or leaves their files untouched, so an intact DV always
-        satisfies one of the first two conditions; the check is manifest
-        metadata only (no data files opened)."""
-        mine = [
-            d
-            for d in self._live_dvs(self._dv_commits(), self._latest_snapshot())
-            if d.get("mor") and int(d.get("as_of_batch", -1)) == batch_id
-        ]
-        if not mine:
-            return []
-        visible = {os.path.basename(p) for p in self.visible_files()}
-        return [int(d["index"]) for d in self._void_mors(mine, visible)]
-
-    def _void_mors(self, dvs: list[dict], names: set[str]) -> list[dict]:
-        """The VOID MOR commits among visible ``dvs`` (``_live_dvs``)
-        against a listing's file basenames ``names``: some referenced
-        file is gone from the listing and no repair verdict (``morfix``
-        marker) covers the DV. Staged-unpublished DVs never get here: no
-        reader applies them and no rewrite can invalidate them (rewrites
-        defer while a transaction is open), so void-ness is undefined
-        until commit."""
-        return [
-            d
-            for d in dvs
-            if d.get("mor")
-            and not set(d.get("files", [])) <= names
-            and not self._op_done("morfix", f"{int(d.get('as_of_batch', -1))}-{int(d['index'])}")
-        ]
-
-    def _mor_needs_repair(self, batch_id: int) -> bool:
-        return bool(self._mor_void_dvs(batch_id))
-
-    def _staged_mor_inserts(
-        self, dv_commits: dict[int, dict] | None = None
-    ) -> dict[int, dict]:
-        """batch id -> insert manifest for STAGED-unpublished pending-mode
-        upserts (lowest dv index wins, like ``_mor_insert_manifests``) —
-        the open transaction's merge half, consumed by ``commit()`` (to
-        publish), ``reset()`` (to discard), later staged upserts in the
-        same epoch (to tombstone against), ``_is_known`` and ``vacuum``."""
-        out: dict[int, dict] = {}
-        if dv_commits is None:
-            dv_commits = self._dv_commits()
-        for i, d in sorted(dv_commits.items()):
-            ins = d.get("insert")
-            if ins and d.get("staged") and not d.get("_published"):
-                out.setdefault(
-                    int(ins["batch_id"]), {"dir": ins["dir"], "files": ins.get("files")}
-                )
-        return out
-
-    def _mor_mark_repaired(self, batch_id: int, void_ids: list[int]) -> None:
-        """Record that a repair pass verified/fixed these void DVs — the
-        marker is written only AFTER the follow-up tombstones are fully
-        published (or the pass proved nothing resurrected), so a crash
-        mid-repair just repairs again."""
-        for i in void_ids:
-            self._mark_op("morfix", f"{batch_id}-{i}", batch_id=batch_id, void_dv=i)
-
-    def _committed_entries(self) -> dict[int, str]:
-        return {b: m["dir"] for b, m in self._committed_manifests().items()}
 
     def _staged_manifests(self) -> dict[int, dict]:
         out: dict[int, dict] = {}
@@ -760,33 +668,163 @@ class ManifestSinkTable:
                 # committer simply doesn't claim it (exactly-once holds:
                 # visibility is the set union of epoch batch-id lists)
                 continue
-            out[b] = {"dir": m.get("dir", self._legacy_dir(b)), "files": m.get("files")}
+            out[b] = {"dir": m["dir"], "files": m["files"]}
         return out
 
-    def _staged_entries(self) -> dict[int, str]:
-        return {b: m["dir"] for b, m in self._staged_manifests().items()}
+    def _list_state(self) -> _TableState:
+        """THE listing of the commit log, in one fixed order:
 
-    def _marker_ids(self) -> set[int]:
-        return set(self._committed_entries())
+        1. the latest snapshot index;
+        2. the DV log;
+        3. the latest snapshot, which must still be at that index;
+        4. staged markers;
+        5. batch markers and epochs;
+
+        then the latest epoch index again, which must not have moved
+        since step 1. If either index moved, list again (at most 5
+        times).
+
+        DV log before snapshot (readers): a compaction plus a MOR upsert
+        landing after the snapshot read can't pair the old files with
+        tombstones taken on the new layout — every listed DV predates
+        the listed snapshot. The index check (rewriters): an unchanged
+        index proves the listed snapshot was already the latest when the
+        DV log was read, so a DV published in between is either listed
+        or its barrier (or compaction) takes the next snapshot index and
+        the rewrite's own CAS loses — without the check a DV and its
+        barrier landing between the two reads would be absorbed unseen
+        (a lost delete). DV log before markers: a marker-path batch
+        committing in between carries no DV. The epoch check: a commit()
+        landing after the DV listing would publish staged merges whose
+        DVs were listed unpublished — their inserts visible through the
+        epoch, their tombstones not (a torn transaction). Staged markers
+        before epochs: commit() publishes its epoch before it drops the
+        markers, so a staged batch is never listed in neither place.
+        The MOR insert manifests, the visible DVs and the staged-
+        transaction members all derive from the ONE DV listing (ADVICE
+        r11: an ``upsert_mor`` publishes tombstones and inserts through
+        one dv CAS, so a consumer sees both or neither)."""
+        for _ in range(5):
+            index, epoch = self._log_position()
+            dv_commits = self._dv_commits()
+            snap = self._latest_snapshot()
+            if (snap["index"] if snap else -1) != index:
+                continue
+            staged = self._staged_manifests()
+            committed = self._committed_manifests()
+            if self._log_position()[1] == epoch:
+                break
+        else:
+            raise RuntimeError("listing: the commit log moved under 5 listings in a row")
+        snap_ = snap or {}
+        # merge-on-read upserts publish their insert rows THROUGH the DV
+        # commit; a marker/epoch entry for the same id wins, and between
+        # two MOR publishes of one batch id (racing zombie replays) the
+        # LOWEST dv index wins deterministically. A staged pending-mode
+        # insert is invisible until its epoch publishes (_dv_live).
+        staged_mor: dict[int, dict] = {}
+        mor_bids: set[int] = set()
+        for _i, d in sorted(dv_commits.items()):
+            ins = d.get("insert")
+            if not ins:
+                continue
+            bid = int(ins["batch_id"])
+            mor_bids.add(bid)
+            m = {"dir": ins["dir"], "files": ins["files"]}
+            if self._dv_live(d):
+                committed.setdefault(bid, m)
+            elif not d.get("_published"):
+                staged_mor.setdefault(bid, m)
+        # every dv commit carrying an insert types its batch 'mor' —
+        # unfiltered by staged-visibility, so typing and entry come from
+        # this one listing (round-13 review: an epoch rename landing
+        # between two listings typed merge batches 'insert')
+        for bid in mor_bids & set(committed):
+            committed[bid]["mor"] = True
+        absorbed = frozenset(snap_.get("absorbed_batch_ids", []))
+        absorbed_dvs = set(snap_.get("absorbed_dv_ids", []))
+        files = snap_.get("files") or {}
+        manifests = [
+            {"dir": d, "files": files[d] if d in files else self._footer_entries(d)}
+            for d in snap_.get("compacted_dirs", [])
+        ]
+        batch_ids = sorted(set(committed) - absorbed)
+        return _TableState(
+            snap=snap,
+            dv_commits=dv_commits,
+            committed=committed,
+            staged=staged,
+            staged_mor=staged_mor,
+            absorbed=absorbed,
+            manifests=manifests + [committed[b] for b in batch_ids],
+            batch_ids=batch_ids,
+            dvs=[d for i, d in sorted(dv_commits.items()) if i not in absorbed_dvs and self._dv_live(d)],
+            staged_open=sorted(i for i, d in dv_commits.items() if d.get("staged") and not d.get("_published")),
+        )
+
+    def _footer_entries(self, rel_dir: str) -> list[dict]:
+        """File entries of a compacted dir whose snapshot carries none
+        (written by a rewriter other than ``_cas_snapshot``), harvested
+        from the parquet footers like any freshly written file's."""
+        base = os.path.join(self.root, "data", rel_dir)
+        names = sorted(f for f in os.listdir(base) if f.endswith(".parquet"))
+        return _collect_file_stats(base, names, self.bloom_columns, self.sum_columns)
+
+    def _mor_void_dvs(self, state: _TableState, batch_id: int) -> list[int]:
+        """MOR DV indexes for ``batch_id`` that are VOID in ``state``
+        (``_void_mors``) — the signature of the publish-then-crash-into-
+        a-racing-rewrite window, where superseded versions have
+        resurrected. Every rewrite
+        path either absorbs the DVs it saw or leaves their files
+        untouched, so an intact DV is always absorbed or fully visible by
+        basename; the check is manifest metadata only (no data files
+        opened)."""
+        return [
+            int(d["index"])
+            for d in self._void_mors(state)
+            if int(d.get("as_of_batch", -1)) == batch_id
+        ]
+
+    def _void_mors(self, state: _TableState) -> list[dict]:
+        """The VOID MOR commits among a listing's visible DVs: some
+        referenced file is gone from the SAME listing's files and no
+        repair verdict (``morfix`` marker) covers the DV. Staged-
+        unpublished DVs never get here: no reader applies them and no
+        rewrite can invalidate them (rewrites defer while a transaction
+        is open), so void-ness is undefined until commit."""
+        names = {e["name"] for e, _b in self._listed_entries(state.manifests)}
+        return [
+            d
+            for d in state.dvs
+            if d.get("mor")
+            and not set(d.get("files", [])) <= names
+            and not self._op_done("morfix", f"{int(d.get('as_of_batch', -1))}-{int(d['index'])}")
+        ]
+
+    def _mor_needs_repair(self, batch_id: int) -> bool:
+        return bool(self._mor_void_dvs(self._list_state(), batch_id))
+
+    def _mor_mark_repaired(self, batch_id: int, void_ids: list[int]) -> None:
+        """Record that a repair pass verified/fixed these void DVs — the
+        marker is written only AFTER the follow-up tombstones are fully
+        published (or the pass proved nothing resurrected), so a crash
+        mid-repair just repairs again."""
+        for i in void_ids:
+            self._mark_op("morfix", f"{batch_id}-{i}", batch_id=batch_id, void_dv=i)
 
     def committed_ids(self) -> list[int]:
         """Micro-batch ids whose batch= directory is currently visible
         (committed and not yet absorbed into a compaction snapshot)."""
-        _, absorbed = self._snapshot_state()
-        return sorted(self._marker_ids() - absorbed)
+        return self._list_state().batch_ids
 
     def _is_known(self, batch_id: int) -> bool:
         """A batch id is known if staged, committed, or absorbed by a
         compaction snapshot — replaying any of them is a no-op (R14).
         Staged pending-mode MOR upserts carry no marker (their insert
-        rides the staged DV commit), so the DV log is consulted too —
-        without it a replayed staged upsert would stage twin files."""
-        if os.path.exists(self._staged_marker(batch_id)):
-            return True
-        _, absorbed = self._snapshot_state()
-        if batch_id in absorbed or batch_id in self._marker_ids():
-            return True
-        return batch_id in self._staged_mor_inserts()
+        rides the staged DV commit), so they count too — without them a
+        replayed staged upsert would stage twin files."""
+        state = self._list_state()
+        return any(batch_id in s for s in (state.staged, state.staged_mor, state.committed, state.absorbed))
 
     def _freeze_schema(self, df: DataFrame) -> None:
         # CAS: of two concurrent first-writers, one freezes the schema,
@@ -850,25 +888,16 @@ class ManifestSinkTable:
         bucket per write."""
         import shutil
 
-        from pyspark.sql import functions as F
+        from kafka_connect_bigquery_storage_write_spark.sinks.bucketed import write_bucketed
 
         n, cols = self.bucket_spec
         missing = [c for c in cols if c not in df.columns]
         if missing:
             raise ValueError(f"bucketed write: key columns {missing} absent from batch")
-        spark = df.sparkSession
         tmp_name = f"kafka_connect_bigquery_storage_write_spark_bwrite_{uuid.uuid4().hex[:12]}"
         tmp_dir = f"{out_dir.rstrip('/')}.bkt-{uuid.uuid4().hex[:8]}"
-        (
-            df.repartition(n, *[F.col(c) for c in cols])
-            .write.mode("overwrite")
-            .option("path", tmp_dir)
-            .bucketBy(n, *cols)
-            .sortBy(*cols)
-            .format("parquet")
-            .saveAsTable(tmp_name)
-        )
-        spark.sql(f"DROP TABLE `{tmp_name}`")
+        write_bucketed(df.repartition(n, *cols), tmp_name, tmp_dir, list(cols), n)
+        df.sparkSession.sql(f"DROP TABLE `{tmp_name}`")
         os.makedirs(out_dir, exist_ok=True)
         for f in sorted(os.listdir(tmp_dir)):
             if f.endswith(".parquet"):
@@ -955,17 +984,12 @@ class ManifestSinkTable:
         # One rename makes the whole multi-batch transaction visible —
         # inserts, upserted rows and tombstones — or none of it.
         while True:
-            manifests = self._staged_manifests()
-            dv_listing = self._dv_commits()
-            staged_dvs = sorted(
-                i for i, d in dv_listing.items() if d.get("staged") and not d.get("_published")
-            )
-            mor_inserts = self._staged_mor_inserts(dv_listing)
-            all_manifests = {**manifests, **mor_inserts}
+            state = self._list_state()
+            all_manifests = {**state.staged, **state.staged_mor}
             staged = sorted(all_manifests)
-            if not staged and not staged_dvs:
+            if not staged and not state.staged_open:
                 return []
-            epoch = len([f for f in os.listdir(os.path.join(self.root, "_commits")) if f.startswith("epoch-")])
+            epoch = self._log_position()[1] + 1
             created = self._atomic_create(
                 os.path.join(self.root, "_commits", f"epoch-{epoch}.json"),
                 json.dumps(
@@ -974,23 +998,19 @@ class ManifestSinkTable:
                         "dirs": {str(b): m["dir"] for b, m in all_manifests.items()},
                         # per-file zone-map stats ride from staged marker to
                         # epoch so pending-mode tables skip files too
-                        "files": {
-                            str(b): m["files"]
-                            for b, m in all_manifests.items()
-                            if m["files"] is not None
-                        },
-                        "dv_indexes": staged_dvs,
+                        "files": {str(b): m["files"] for b, m in all_manifests.items()},
+                        "dv_indexes": state.staged_open,
                         # typing travels WITH the publish (round-13
                         # review): a reader listing epochs after this
                         # rename but the DV log before it must still
                         # type these batches 'upsert' in the change feed
-                        "mor_batch_ids": sorted(mor_inserts),
+                        "mor_batch_ids": sorted(state.staged_mor),
                     }
                 ),
             )
             if created:
                 break
-        for b in manifests:
+        for b in state.staged:
             # the racing winner may have already consumed a marker
             with contextlib_suppress(FileNotFoundError):
                 os.remove(self._staged_marker(b))
@@ -1010,14 +1030,13 @@ class ManifestSinkTable:
         ever referenced the unpublished index."""
         import shutil
 
-        entries = self._staged_entries()
-        for b, rel_dir in entries.items():
+        state = self._list_state()
+        for b, m in state.staged.items():
             os.remove(self._staged_marker(b))
-            shutil.rmtree(os.path.join(self.root, "data", rel_dir), ignore_errors=True)
-        discarded = set(entries)
-        for i, d in sorted(self._dv_commits().items()):
-            if not (d.get("staged") and not d.get("_published")):
-                continue
+            shutil.rmtree(os.path.join(self.root, "data", m["dir"]), ignore_errors=True)
+        discarded = set(state.staged)
+        for i in state.staged_open:
+            d = state.dv_commits[i]
             with contextlib_suppress(FileNotFoundError):
                 os.remove(os.path.join(self.root, "_commits", f"dv-{i}.json"))
             if d.get("dir"):
@@ -1071,56 +1090,11 @@ class ManifestSinkTable:
 
     # -- shared rewrite mechanics (one listing, pointer copies, the commit) --
 
-    def _visible_state(
-        self,
-    ) -> tuple[list[dict], list[int], set[int], dict | None, list[dict]]:
-        """ONE consistent listing for every rewrite path: (visible
-        manifests, visible batch ids, absorbed ids, latest snapshot,
-        visible DVs). The snapshot is read FIRST, then the commit log —
-        a batch committing between the two reads is then included in
-        BOTH the data and the absorbed set, and a snapshot landing
-        between them only makes this rewrite's own CAS lose (safe). The
-        reverse order could mark a freshly committed batch absorbed
-        WITHOUT merging its rows — silent data loss (round-11 review).
-
-        The visible DVs and the MOR insert manifests merged into the
-        data listing derive from ONE ``_dv_commits()`` read (ADVICE
-        r11): an ``upsert_mor`` publishes tombstones and insert rows
-        through a single dv-commit CAS, so a rewrite must see both or
-        neither — two listings could absorb the inserts while leaving
-        the tombstones unapplied (duplicates baked in, and the void
-        repair would then tombstone the batch's own rewritten rows).
-        The DV log is listed BEFORE the batch markers: a marker-path
-        batch committing in between carries no DV yet, and a DV commit
-        landing after this point stays visible and guards itself via
-        the barrier-snapshot protocol."""
-        snap = self._latest_snapshot()
-        absorbed = set((snap or {}).get("absorbed_batch_ids", []))
-        dv_commits = self._dv_commits()
-        dvs = self._live_dvs(dv_commits, snap)
-        committed = self._committed_manifests(dv_commits)
-        batch_ids = sorted(set(committed) - absorbed)
-        manifests = self._manifests_from(snap or {}, dv_commits, committed=committed)
-        return manifests, batch_ids, absorbed, snap, dvs
-
-    @staticmethod
-    def _listed_entries(manifests: list[dict], root: str) -> list[tuple[dict, str]]:
-        """(file entry, base dir) for every file of a listing; legacy
-        manifests without per-file stats synthesize keep-everything
-        entries from a directory listing."""
-        plan: list[tuple[dict, str]] = []
-        for m in manifests:
-            base = os.path.join(root, "data", m["dir"])
-            entries = m["files"]
-            if entries is None:
-                entries = [
-                    {"name": f, "rows": None, "stats": {}}
-                    for f in sorted(os.listdir(base))
-                    if f.endswith(".parquet")
-                ]
-            for e in entries:
-                plan.append((e, base))
-        return plan
+    def _listed_entries(self, manifests: list[dict]) -> list[tuple[dict, str]]:
+        """(file entry, base dir) for every file of a listing."""
+        return [
+            (e, os.path.join(self.root, "data", m["dir"])) for m in manifests for e in m["files"]
+        ]
 
     @staticmethod
     def _pointer_copy(e: dict, base: str, out_dir: str) -> dict:
@@ -1206,17 +1180,14 @@ class ManifestSinkTable:
                 os.rename(os.path.join(tmp_out, f), os.path.join(out_dir, f))
         shutil.rmtree(tmp_out, ignore_errors=True)
 
-    def _rewrite_listing(
-        self, spark: SparkSession
-    ) -> tuple[list[dict], list[int], set[int], dict | None, list[dict]]:
-        """``_repair_void_mors`` + ``_visible_state``, with void-ness
-        RE-CHECKED against the LISTING about to be absorbed (round-12
-        review): a MOR DV that goes void BETWEEN the repair pass and the
-        listing — a racing rewrite's snapshot CAS landing in that window
-        — would otherwise be absorbed as a no-op, permanently baking the
-        resurrected superseded versions in AND clearing the void signal
-        the replay repair keys on. Deriving void-ness from the same
-        listing the snapshot will absorb closes the window: any visible
+    def _rewrite_listing(self, spark: SparkSession) -> _TableState:
+        """``_repair_void_mors``, then ONE ``_list_state`` for every
+        rewrite path, with void-ness RE-CHECKED against the listing about
+        to be absorbed (round-12 review): a MOR DV that goes void BETWEEN
+        the repair pass and the listing — a racing rewrite's snapshot CAS
+        landing in that window — would otherwise be absorbed as a no-op,
+        permanently baking the resurrected superseded versions in AND
+        clearing the void signal the replay repair keys on. Any visible
         MOR DV whose referenced basenames are not fully contained in the
         listing (and that carries no morfix verdict) sends the pass back
         through repair for a fresh listing. Basenames are never reused,
@@ -1231,22 +1202,15 @@ class ManifestSinkTable:
         void signal until then). Deferring maintenance across an open
         transaction is the Delta/Iceberg conflict-abort shape; the
         transaction releases it at commit()/reset()."""
-        staged_open = [
-            i
-            for i, d in self._dv_commits().items()
-            if d.get("staged") and not d.get("_published")
-        ]
-        if staged_open:
-            raise ValueError(
-                f"maintenance deferred: staged pending-mode merge open (dv {sorted(staged_open)}); "
-                "commit() or reset() the transaction first"
-            )
         for _ in range(5):
             self._repair_void_mors(spark)
-            state = self._visible_state()
-            manifests, _batch_ids, _absorbed, _snap, dvs = state
-            names = {e["name"] for e, _b in self._listed_entries(manifests, self.root)}
-            if not self._void_mors(dvs, names):
+            state = self._list_state()
+            if state.staged_open:
+                raise ValueError(
+                    f"maintenance deferred: staged pending-mode merge open (dv {state.staged_open}); "
+                    "commit() or reset() the transaction first"
+                )
+            if not self._void_mors(state):
                 return state
         raise RuntimeError(
             "rewrite: unrepaired void MOR delete vectors kept appearing "
@@ -1262,23 +1226,24 @@ class ManifestSinkTable:
         it can see — the lost tombstones are re-derived from the batch's
         own persisted rows via ``upsert_mor``'s repair branch (key columns
         ride in the dv commit)."""
+        state = self._list_state()
+        void = {int(d.get("as_of_batch", -1)) for d in self._void_mors(state)}
         seen: set[int] = set()
-        for i, d in sorted(self._dv_commits().items()):
+        for i, d in sorted(state.dv_commits.items()):
             ins = d.get("insert")
             if not d.get("mor") or not ins:
                 continue
             b = int(ins["batch_id"])
-            if b in seen:
+            if b in seen or b not in void:
                 continue
             seen.add(b)
-            if self._mor_needs_repair(b):
-                keys = d.get("keys")
-                if not keys:
-                    raise ValueError(
-                        f"void MOR delete vector {i} (batch {b}) predates key "
-                        "recording; replay the batch via upsert_mor before rewriting"
-                    )
-                self.upsert_mor(spark, None, keys=list(keys), batch_id=b)
+            keys = d.get("keys")
+            if not keys:
+                raise ValueError(
+                    f"void MOR delete vector {i} (batch {b}) predates key "
+                    "recording; replay the batch via upsert_mor before rewriting"
+                )
+            self.upsert_mor(spark, None, keys=list(keys), batch_id=b)
 
     # -- replay markers: the only code that builds, checks or creates them --
     #
@@ -1351,15 +1316,16 @@ class ManifestSinkTable:
             # bucketed tables cluster by their bucket spec — a competing
             # order would silently destroy the co-located-join layout
             raise ValueError("bucketed tables cluster by bucket_spec; order_by/zorder_by unsupported")
-        manifests, batch_ids, absorbed, snap, dvs = self._rewrite_listing(spark)
-        if not manifests:
+        state = self._rewrite_listing(spark)
+        snap, dvs = state.snap or {}, state.dvs
+        if not state.manifests:
             return None
         dv_files = {f for d in dvs for f in d.get("files", [])}
         plan = [
             (e, base, e["name"] in dv_files or touched(e))
-            for e, base in self._listed_entries(manifests, self.root)
+            for e, base in self._listed_entries(state.manifests)
         ]
-        n_dirs = len(batch_ids) + len((snap or {}).get("compacted_dirs", []))
+        n_dirs = len(state.manifests)
         if skip is not None and skip(n_dirs, sum(hit for _e, _b, hit in plan), bool(dvs)):
             self._mark_op("mrgop", op_id, rows=0)
             return None
@@ -1393,9 +1359,9 @@ class ManifestSinkTable:
         if not self._cas_snapshot(
             n_snap,
             [new_dir],
-            sorted(absorbed | set(batch_ids)),
+            sorted(state.absorbed | set(state.batch_ids)),
             {new_dir: files},
-            sorted(self._absorbed_dv_ids() | {d["index"] for d in dvs}),
+            sorted(set(snap.get("absorbed_dv_ids", [])) | {d["index"] for d in dvs}),
         ):
             shutil.rmtree(out_dir, ignore_errors=True)
             return None
@@ -1451,8 +1417,7 @@ class ManifestSinkTable:
         the rewrite set regardless of size, and the new snapshot
         absorbs those DVs — so the pass doubles as cheap tombstone
         absorption for MOR-heavy tables. File row counts come from the
-        manifest; legacy entries without counts are treated as small
-        (merged — never wrong, their stats are unknown anyway).
+        manifest.
         ``order_by`` clusters the MERGED OUTPUT only (range partition +
         in-file sort); pointer-copied files keep their layout. Bucketed
         tables binpack through the bucket-preserving write seam.
@@ -1462,7 +1427,7 @@ class ManifestSinkTable:
         """
         return self._cow_rewrite(
             spark,
-            lambda e: e.get("rows") is None or e["rows"] < small_rows,
+            lambda e: e["rows"] < small_rows,
             target_files=target_files,
             order_by=order_by,
             # nothing worth merging, no tombstones to absorb
@@ -1475,7 +1440,7 @@ class ManifestSinkTable:
         without opening a single data file:
 
             n_files            visible data files
-            n_small_files      files under ``small_rows`` (or unknown)
+            n_small_files      files under ``small_rows``
             pending_dv_rows    tombstones every read currently anti-joins
             n_visible_dvs      unabsorbed delete-vector commits
             n_void_mor_batches crashed MOR publishes awaiting repair
@@ -1487,31 +1452,22 @@ class ManifestSinkTable:
         At 100 TB this is the hourly cron's only read: one snapshot +
         commit-log listing, O(files) dict arithmetic.
         """
-        snap = self._latest_snapshot() or {}
-        dv_commits = self._dv_commits()
-        manifests = self._manifests_from(snap, dv_commits)
-        plan = self._listed_entries(manifests, self.root)
+        state = self._list_state()
+        plan = self._listed_entries(state.manifests)
         n_files = len(plan)
-        n_small = sum(
-            1 for e, _b in plan if e.get("rows") is None or e["rows"] < small_rows
-        )
+        n_small = sum(1 for e, _b in plan if e["rows"] < small_rows)
         # the advisor reads the VISIBLE state: staged-unpublished DVs
         # (an open pending-mode transaction) are not pending read work,
         # and every rewrite DEFERS while one exists — advising binpack
         # on staged tombstones would make the cron act into the loud
         # open-transaction refusal, breaking the always-clears contract.
-        # The open transaction is surfaced explicitly instead.
-        dvs = self._live_dvs(dv_commits, snap)
-        n_staged_open = sum(
-            1 for d in dv_commits.values() if d.get("staged") and not d.get("_published")
-        )
+        # The open transaction is surfaced explicitly instead. Void-MOR
+        # detection runs against the same listing (the report stays a
+        # single snapshot + commit-log pass at any batch count).
+        dvs = state.dvs
+        n_staged_open = len(state.staged_open)
         dv_rows = sum(int(d.get("rows", 0)) for d in dvs)
-        # void-MOR detection against the ONE listing above (the report
-        # stays a single snapshot + commit-log pass at any batch count);
-        # staged DVs are excluded — they may legitimately reference other
-        # STAGED (not-yet-visible) files, and void-ness is undefined for
-        # a transaction no reader can see
-        n_void = len(self._void_mors(dvs, {e["name"] for e, _b in plan}))
+        n_void = len(self._void_mors(state))
         return {
             "n_files": n_files,
             "n_small_files": n_small,
@@ -1599,31 +1555,13 @@ class ManifestSinkTable:
         pending-mode commit, or its staging epoch has published."""
         return not d.get("staged") or bool(d.get("_published"))
 
-    def _absorbed_dv_ids(self) -> set[int]:
-        snap = self._latest_snapshot()
-        return set((snap or {}).get("absorbed_dv_ids", []))
-
     def visible_dvs(self) -> list[dict]:
         """DV commits not yet absorbed by the latest snapshot (includes
         raced-and-void DVs, which no-op via dead basenames). Callers that
-        also consume the data listing must NOT pair this with a separate
-        manifest listing — use ``_visible_state``/``_read_state`` (the
-        one-listing rule, see ``_committed_manifests``). Staged
-        pending-mode DVs enter only once their epoch publishes."""
-        snap = self._latest_snapshot()
-        return self._live_dvs(self._dv_commits(), snap)
-
-    def _live_dvs(self, dv_commits: dict[int, dict], snap: dict | None, staged: bool = False) -> list[dict]:
-        """THE DV listing rule: the commits of ONE ``_dv_commits()``
-        listing that ``snap`` has not absorbed and that are live
-        (``_dv_live``); ``staged=True`` also keeps an open pending-mode
-        transaction's staged DVs (they publish with the caller's)."""
-        absorbed = set((snap or {}).get("absorbed_dv_ids", []))
-        return [
-            d
-            for i, d in sorted(dv_commits.items())
-            if i not in absorbed and (staged or self._dv_live(d))
-        ]
+        also consume the data listing take both from one ``_list_state``
+        instead. Staged pending-mode DVs enter only once their epoch
+        publishes."""
+        return self._list_state().dvs
 
     def _dv_relation(self, spark: SparkSession, dvs: list[dict]) -> DataFrame:
         paths = [os.path.join(self.root, d["dir"]) for d in dvs]
@@ -1672,21 +1610,24 @@ class ManifestSinkTable:
         are short callers of (the barrier protocol is in the section
         comment above):
 
-        1. list the latest snapshot ``prior``;
-        2. ``plan(prior)`` returns the NEW tombstones as a ``(file, pos)``
-           relation — the caller picks the candidate files and anti-joins
-           the positions its own DV listing rule already tombstones — or
-           None when no file is a candidate;
+        1. take ONE ``_list_state``; its snapshot is ``prior``;
+        2. ``plan(state)`` returns the NEW tombstones as a ``(file, pos)``
+           relation — the caller picks the candidate files from the
+           state's manifests and anti-joins the positions its DVs already
+           tombstone — or None when no file is a candidate;
         3. the tombstones are written ONCE; their count and referenced
            files ride the write as observed metrics;
         4. ``dv-<idx>.json`` is CAS'd from the common fields plus
-           ``fields(first)`` (``first``: this call has not published a DV
-           yet), bumping past concurrent publishers' indexes;
+           ``fields(first, state)`` (``first``: this call has not
+           published a DV yet), bumping past concurrent publishers'
+           indexes;
         5. the guard loop occupies (or inspects) the next snapshot index:
-           barrier won or DV absorbed -> done; another writer's barrier ->
-           re-guard; a real rewrite -> the DV is void, recompute (at most
-           5 attempts). ``absorbed_batch(latest, idx) -> bool`` may settle
-           that last case first (MOR's absorbed-without-its-DV verify).
+           barrier won or DV absorbed -> done; another writer's barrier
+           over ``prior``'s layout -> re-guard; anything else (a real
+           rewrite, or a barrier copying one) -> the DV is void,
+           recompute (at most 5 attempts). ``absorbed_batch(latest, idx)
+           -> bool`` may settle that last case first (MOR's
+           absorbed-without-its-DV verify).
 
         Returns ``(dv_index, n)``; when nothing is left to tombstone,
         None if this call published no DV and ``(None, 0)`` if it did (a
@@ -1697,11 +1638,16 @@ class ManifestSinkTable:
         from pyspark.sql import Observation
         from pyspark.sql import functions as F
 
+        def layout(s: dict | None) -> tuple:
+            s = s or {}
+            return s.get("compacted_dirs", []), sorted(s.get("absorbed_batch_ids", []))
+
         commits = os.path.join(self.root, "_commits")
         published = False
         for _attempt in range(5):
-            prior = self._latest_snapshot()
-            hits = plan(prior)
+            state = self._list_state()
+            prior = state.snap
+            hits = plan(state)
             n = 0
             if hits is not None:
                 rel_dir = os.path.join("_deletes", f"dv-{uuid.uuid4().hex[:12]}")
@@ -1726,20 +1672,21 @@ class ManifestSinkTable:
                     shutil.rmtree(out_dir, ignore_errors=True)
             if n == 0:
                 return (None, 0) if published else None
+            idx = max(state.dv_commits, default=-1) + 1
             while True:  # dv-index CAS (concurrent publishers bump past each other)
-                idx = max(self._dv_commits(), default=-1) + 1
                 payload = {
                     "index": idx,
                     "dir": rel_dir,
                     "rows": n,
                     "files": sorted(got["_files"]),
                     "read_snapshot": prior["index"] if prior else -1,
-                    "as_of_epoch": len([f for f in os.listdir(commits) if f.startswith("epoch-")]) - 1,
+                    "as_of_epoch": self._log_position()[1],
                     "op_id": op_id,
-                    **fields(not published),
+                    **fields(not published, state),
                 }
                 if self._atomic_create(os.path.join(commits, f"dv-{idx}.json"), json.dumps(payload)):
                     break
+                idx += 1
             published = True
             # guard loop: occupy (or inspect) the next snapshot index
             guard = prior
@@ -1750,8 +1697,8 @@ class ManifestSinkTable:
                 if idx in set(latest.get("absorbed_dv_ids", [])):
                     # a real snapshot raced us AND applied this DV
                     return idx, n
-                if latest.get("barrier"):
-                    guard = latest  # another writer's barrier: files unchanged
+                if latest.get("barrier") and layout(latest) == layout(prior):
+                    guard = latest  # another writer's barrier over our layout: files unchanged
                     continue
                 if absorbed_batch is not None and absorbed_batch(latest, idx):
                     return idx, n
@@ -1783,8 +1730,8 @@ class ManifestSinkTable:
         if self._op_done("dvop", op_id):
             return None
 
-        def plan(_prior):
-            cand = self.visible_files(where)
+        def plan(state):
+            cand = self._prune_paths(state.manifests, where)
             if not cand:
                 return None
             hits = (
@@ -1792,11 +1739,11 @@ class ManifestSinkTable:
                 .filter(cond)
                 .select(F.col("_dv_file").alias("file"), F.col("_dv_pos").alias("pos"))
             )
-            dvs = self.visible_dvs()
             # already-tombstoned positions don't re-delete (exact count)
+            dvs = state.dvs
             return hits.join(self._dv_relation(spark, dvs), ["file", "pos"], "left_anti") if dvs else hits
 
-        def fields(_first):
+        def fields(_first, state):
             return {
                 "where": [[c, op, _stat_norm(v)] for c, op, v in where],
                 # ALL batch markers ever committed (absorbed included):
@@ -1814,7 +1761,7 @@ class ManifestSinkTable:
                 # change feed (a feed consumer would delete, then the
                 # replayed merges resurrect) and wrongly applying it to
                 # pre-merge time travel.
-                "as_of_batch": max([*self._marker_ids(), *self._change_commits()], default=-1),
+                "as_of_batch": max([*state.committed, *self._change_commits()], default=-1),
             }
 
         res = self._publish_tombstones(spark, plan, fields, op_id=op_id, what="delete_where_dv")
@@ -1873,12 +1820,12 @@ class ManifestSinkTable:
         (``changes()`` unions them; an incremental consumer reads them
         one at a time)."""
         logged = self._change_commits()
-        # ONE DV-log listing feeds both the committed set and the typing:
-        # each entry carries its own "mor" flag (round-13 review — a
-        # separate _mor_insert_manifests listing could miss a merge batch
-        # that an epoch rename published in between, typing it 'insert'
-        # and making a mirror append duplicates instead of merging)
-        committed = self._committed_manifests(self._dv_commits())
+        # ONE listing feeds both the committed set and the typing: each
+        # entry carries its own "mor" flag (round-13 review — a separate
+        # MOR listing could miss a merge batch that an epoch rename
+        # published in between, typing it 'insert' and making a mirror
+        # append duplicates instead of merging)
+        committed = self._list_state().committed
         sources: list[tuple[int, str, str]] = []
         for b, m in sorted(committed.items()):
             if b <= after_batch_id:
@@ -2185,8 +2132,8 @@ class ManifestSinkTable:
         therefore provably contains no row matching any update key, so
         pointer-copying it preserves MERGE semantics; matched rows all
         live in touched files, and insert keys land in the rewritten
-        output. Files without stats (legacy markers) and files
-        referenced by visible delete vectors are always rewritten.
+        output. Files without stats and files referenced by visible
+        delete vectors are always rewritten.
 
         The update keys are collected to the driver for the per-file
         test — the planning metadata pass every MERGE engine does
@@ -2371,10 +2318,11 @@ class ManifestSinkTable:
             # pass with the batch's own persisted rows as the updates (its
             # keys ARE the update keys) and publishes a follow-up
             # tombstone-only DV through the same guard loop.
-            void_ids = self._mor_void_dvs(batch_id)
+            state = self._list_state()
+            void_ids = self._mor_void_dvs(state, batch_id)
             if not void_ids:
                 return None
-            ins = self._mor_insert_manifests().get(batch_id)
+            ins = state.committed.get(batch_id)
             if ins is None or not os.path.exists(os.path.join(self.root, "data", ins["dir"])):
                 # absorbed+vacuumed: a later rewrite applied everything and
                 # vacuum reclaimed the batch dir — nothing verifiable
@@ -2388,8 +2336,7 @@ class ManifestSinkTable:
                 os.path.join(self.root, "data", ins["dir"])
             )
             repair = True
-            snap_now = self._latest_snapshot() or {}
-            if batch_id in set(snap_now.get("absorbed_batch_ids", [])):
+            if batch_id in state.absorbed:
                 # distinct case (ADVICE r11): the batch was absorbed into
                 # a compacted layout (its rows renamed) while this DV was
                 # not — recomputing tombstones by key would delete the
@@ -2433,9 +2380,8 @@ class ManifestSinkTable:
             )
         if repair:
             # the batch's files already exist and are already published
-            ins = self._mor_insert_manifests()[batch_id]
             data_dir = os.path.join(self.root, "data", ins["dir"])
-            insert_manifest = {"batch_id": batch_id, "dir": ins["dir"], "files": ins.get("files") or []}
+            insert_manifest = {"batch_id": batch_id, "dir": ins["dir"], "files": ins["files"]}
         else:
             # the insert files are written ONCE, up front; they become
             # visible only at the publish CAS (marker or dv commit)
@@ -2453,12 +2399,10 @@ class ManifestSinkTable:
         own_files = {e["name"] for e in insert_manifest["files"]}
         own_batch_dir = f"batch={batch_id}"
 
-        def plan(prior):
-            # ONE DV-log listing drives the candidate manifests, the
-            # staged-transaction members AND the already-tombstoned
-            # filter below (the one-listing rule)
-            dv_listing = self._dv_commits()
-            listing = self._manifests_from(prior or {}, dv_listing)
+        def plan(state):
+            # ONE listing drives the candidate manifests, the staged-
+            # transaction members AND the already-tombstoned filter below
+            listing = state.manifests
             if pending:
                 # staged rows publish in the SAME epoch as this merge, so
                 # later staged upserts must tombstone superseded versions
@@ -2467,8 +2411,8 @@ class ManifestSinkTable:
                 # (their tombstones become visible together at commit)
                 listing = (
                     listing
-                    + [m for _b, m in sorted(self._staged_manifests().items())]
-                    + [m for _b, m in sorted(self._staged_mor_inserts(dv_listing).items())]
+                    + [m for _b, m in sorted(state.staged.items())]
+                    + [m for _b, m in sorted(state.staged_mor.items())]
                 )
             # never tombstone THIS batch's own rows: on a void-retry (or a
             # zombie twin's publish) the batch is already visible and its
@@ -2479,7 +2423,7 @@ class ManifestSinkTable:
             ]
             cand = [
                 os.path.join(base, e["name"])
-                for e, base in self._listed_entries(listing, self.root)
+                for e, base in self._listed_entries(listing)
                 if e["name"] not in own_files and touched(e)
             ]
             if not cand:
@@ -2493,10 +2437,10 @@ class ManifestSinkTable:
             # already-tombstoned positions don't re-tombstone; in pending
             # mode the open transaction's staged DVs count (they publish
             # with this one)
-            dvs = self._live_dvs(dv_listing, prior, staged=pending)
+            dvs = state.dvs + [state.dv_commits[i] for i in state.staged_open] if pending else state.dvs
             return hits.join(self._dv_relation(spark, dvs), ["file", "pos"], "left_anti") if dvs else hits
 
-        def fields(first):
+        def fields(first, _state):
             return {
                 "mor": True,
                 # the insert manifest rides only the FIRST dv commit
@@ -2669,21 +2613,17 @@ class ManifestSinkTable:
             except OSError:
                 return False  # vanished concurrently; nothing to reclaim
 
-        committed = self._committed_entries()
-        staged = self._staged_entries()
+        state = self._list_state()
+        committed = {b: m["dir"] for b, m in state.committed.items()}
+        absorbed = state.absorbed
         # pending-mode MOR upserts stage through the DV log, not a marker:
         # their batch dirs would otherwise look orphaned and fall to the
         # retention clock — but an OPEN transaction must survive
         # arbitrarily long (commit()/reset() releases it, not time)
-        staged_mor = {b: m["dir"] for b, m in self._staged_mor_inserts().items()}
-        _, absorbed = self._snapshot_state()
-        live_batches = (set(committed) - absorbed) | set(staged) | set(staged_mor)
-        live_dirs = (
-            {committed[b] for b in committed if b in live_batches}
-            | set(staged.values())
-            | set(staged_mor.values())
-        )
-        live_compacted, _ = self._snapshot_state()
+        staged = {b: m["dir"] for b, m in (*state.staged.items(), *state.staged_mor.items())}
+        live_batches = set(state.batch_ids) | set(staged)
+        live_dirs = {committed[b] for b in committed if b in live_batches} | set(staged.values())
+        live_compacted = (state.snap or {}).get("compacted_dirs", [])
         # consumer pins: unconsumed change sources survive this vacuum.
         # consumer_ttl_s bounds the pin (ADVICE r11): a registration is a
         # LEASE, refreshed on every poll/advance (ChangeFeedConsumer
@@ -2706,7 +2646,7 @@ class ManifestSinkTable:
         if consumers:
             min_after = min(int(c.get("after_batch_id", -1)) for c in consumers)
             pinned_bids = {b for b in committed if b > min_after}
-            for i, d in self._dv_commits().items():
+            for i, d in state.dv_commits.items():
                 if d.get("mor"):
                     # a MOR upsert's change source is its batch dir (pinned
                     # via the id above); the mechanism DV itself is not
@@ -2734,13 +2674,7 @@ class ManifestSinkTable:
                 if bid in live_batches:
                     # the batch is live: drop loser/orphan attempt dirs the
                     # manifest doesn't reference — but only past retention,
-                    # because an attempt mid-CAS looks identical to a loser.
-                    # Legacy flat layout (marker without "dir": data files
-                    # sit directly under batch=<id>, live_dirs holds d
-                    # itself) has no attempt dirs to sweep — entries here
-                    # are the batch's parquet files, never losers.
-                    if d in live_dirs:
-                        continue
+                    # because an attempt mid-CAS looks identical to a loser
                     for att in os.listdir(os.path.join(data_root, d)):
                         rel = os.path.join(d, att)
                         if rel in live_dirs or not os.path.isdir(os.path.join(data_root, rel)):
@@ -2768,12 +2702,13 @@ class ManifestSinkTable:
         # dirs — reclaim regardless of age); committed-but-live DVs stay,
         # as do DVs a registered consumer has not applied yet; dirs with
         # no dv-commit at all are crashed attempts (retention)
+        absorbed_dvs = set((state.snap or {}).get("absorbed_dv_ids", []))
         dv_dirs_live = {
             c["dir"]
-            for c in self._dv_commits().values()
-            if c["index"] not in self._absorbed_dv_ids() or c["index"] in pinned_dvs
+            for c in state.dv_commits.values()
+            if c["index"] not in absorbed_dvs or c["index"] in pinned_dvs
         }
-        dv_dirs_committed = {c["dir"] for c in self._dv_commits().values()}
+        dv_dirs_committed = {c["dir"] for c in state.dv_commits.values()}
         del_root = os.path.join(self.root, "_deletes")
         for d in os.listdir(del_root):
             rel = os.path.join("_deletes", d)
@@ -2877,14 +2812,13 @@ class ManifestSinkTable:
         stats, so zone maps drop non-matching files before any scan and
         the predicate re-applies as a residual filter —
         ``read_as_of(..., where=p) == read_as_of(...).filter(p)``.
-        Epoch manifests carry per-file stats since the staged-merge
-        work (commit() copies them from the staged markers); legacy
-        epochs and markers without stats keep all files
-        (residual-only)."""
+        Epoch manifests carry the staged markers' per-file stats
+        (commit() copies them), so pending-mode travel prunes too."""
         if (epoch is None) == (batch_id is None):
             raise ValueError("pass exactly one of epoch= (pending) or batch_id= (committed)")
         _check_ops(where)
         commits = os.path.join(self.root, "_commits")
+        state = self._list_state()
         manifests: dict[int, dict] = {}
         published_at: dict[int, int] = {}  # staged dv index -> publishing epoch
         if epoch is not None:
@@ -2897,15 +2831,12 @@ class ManifestSinkTable:
                         published_at[int(i)] = min(published_at.get(int(i), e_idx), e_idx)
                     if e_idx > epoch:
                         continue
-                    dirs = e.get("dirs") or {str(b): self._legacy_dir(int(b)) for b in e["batch_ids"]}
-                    files_map = e.get("files") or {}
-                    for bid, d in dirs.items():
-                        manifests[int(bid)] = {"dir": d, "files": files_map.get(bid)}
+                    for bid, d in e["dirs"].items():
+                        manifests[int(bid)] = {"dir": d, "files": e["files"][bid]}
         else:
-            mor_bids = set(self._mor_insert_manifests())
-            for b, m in self._committed_manifests().items():
+            for b, m in state.committed.items():
                 # MOR batches publish through a dv commit, not a marker file
-                if b <= batch_id and (os.path.exists(self._commit_marker(b)) or b in mor_bids):
+                if b <= batch_id and (os.path.exists(self._commit_marker(b)) or m.get("mor")):
                     manifests[b] = m
         schema = self.schema()
         dir_paths = [os.path.join(self.root, "data", m["dir"]) for _, m in sorted(manifests.items())]
@@ -2932,7 +2863,7 @@ class ManifestSinkTable:
                 return d.get("as_of_epoch", -1) <= epoch
             return self._dv_live(d) and d.get("as_of_batch", -1) <= batch_id
 
-        dvs = [d for d in self._dv_commits().values() if _dv_in_history(d)]
+        dvs = [d for d in state.dv_commits.values() if _dv_in_history(d)]
         if dvs:
             # layout-reconstructibility check against ALL traveled files,
             # not the pruned subset — DV validity is a property of the
@@ -3004,8 +2935,7 @@ class ManifestSinkTable:
 
         ``where`` restricts the comparison (a 100-TB diff of one key
         range / partition): BOTH sides get the zone-map-pruned read
-        (committed-mode batch manifests carry per-file stats; epoch /
-        legacy manifests fall back to residual-only). Use predicates
+        (batch and epoch manifests carry per-file stats). Use predicates
         over columns STABLE across the two states (keys, partition
         columns) — a predicate on a mutable value column classifies a
         row whose update moved it across the predicate boundary as an
@@ -3084,79 +3014,33 @@ class ManifestSinkTable:
         )
 
     # -- read path ------------------------------------------------------------
-    def _manifests_from(
-        self,
-        snap: dict,
-        dv_commits: dict[int, dict] | None,
-        committed: dict[int, dict] | None = None,
-    ) -> list[dict]:
-        """Visible manifests derived from an ALREADY-READ snapshot and
-        (optionally) already-taken DV-commit / batch-marker listings —
-        the single body behind ``_visible_manifests``, ``_visible_state``
-        and ``_read_state``, so the legacy-files handling and the
-        absorbed-set arithmetic can never diverge between them."""
-        compacted = list(snap.get("compacted_dirs", []))
-        manifests = [{"dir": d, "files": (snap.get("files") or {}).get(d)} for d in compacted]
-        if committed is None:
-            committed = self._committed_manifests(dv_commits)
-        absorbed = set(snap.get("absorbed_batch_ids", []))
-        manifests += [committed[i] for i in sorted(set(committed) - absorbed)]
-        return manifests
-
     def _dv_free_manifests(self, what: str) -> list[dict]:
-        """One-listing 'no pending DVs' read state for the stats-only and
-        bucketed paths (round-12 review, same class as ADVICE r11's torn
-        read): the DV-emptiness CHECK and the manifest listing derive
-        from ONE ``_dv_commits()`` + ONE snapshot read. Checked-then-
-        listed separately, a MOR upsert publishing in between would slip
-        its insert rows into a listing whose tombstones the check never
-        saw — a bucketed snapshot (or stats sum) quietly carrying both
-        the superseded and the new row versions. Raises the documented
-        pending-DV refusal; otherwise returns the visible manifests."""
-        dv_commits = self._dv_commits()
-        snap = self._latest_snapshot() or {}
-        # staged-unpublished DVs (an open pending-mode transaction) are
-        # NOT pending read work — the visible state carries zero
-        # tombstones, so stats/bucketed answers over it are exact; and
-        # the refusal's advice ('run compact() first') would dead-end in
-        # compact()'s own open-transaction deferral (round-13 review)
-        if self._live_dvs(dv_commits, snap):
+        """'No pending DVs' read state for the stats-only and bucketed
+        paths (round-12 review, same class as ADVICE r11's torn read):
+        the DV-emptiness CHECK and the manifests come from ONE
+        ``_list_state``. Checked-then-listed separately, a MOR upsert
+        publishing in between would slip its insert rows into a listing
+        whose tombstones the check never saw — a bucketed snapshot (or
+        stats sum) quietly carrying both the superseded and the new row
+        versions. Staged-unpublished DVs (an open pending-mode
+        transaction) are NOT pending read work — the visible state
+        carries zero tombstones, so stats/bucketed answers over it are
+        exact; and the refusal's advice ('run compact() first') would
+        dead-end in compact()'s own open-transaction deferral (round-13
+        review). Raises the documented pending-DV refusal; otherwise
+        returns the visible manifests."""
+        state = self._list_state()
+        if state.dvs:
             raise ValueError(
                 f"{what} unavailable while delete vectors are pending; run compact() first"
             )
-        return self._manifests_from(snap, dv_commits)
-
-    def _visible_manifests(self) -> list[dict]:
-        """Visible content = latest compaction snapshot's dirs plus
-        committed batches not absorbed by it, each as
-        ``{"dir": rel, "files": [{"name", "rows", "stats"}] | None}``.
-        One snapshot read + one commit-log read drive both halves (the
-        absorbed set comes from the SAME snapshot the compacted dirs
-        do)."""
-        return self._manifests_from(self._latest_snapshot() or {}, None)
-
-    def _read_state(
-        self, where: list[tuple] | None = None
-    ) -> tuple[list[str], list[dict]]:
-        """ONE consistent (pruned file paths, visible DVs) listing for the
-        read path (ADVICE r11): a single ``_dv_commits()`` read and a
-        single snapshot read drive both the data listing and the
-        tombstone relation, so an ``upsert_mor`` publish is seen entire —
-        inserts AND tombstones — or not at all. Listing data first and
-        DVs second could apply a new MOR DV's tombstones against the old
-        files while its insert rows are absent from the path list:
-        upserted keys would transiently vanish, a state that never
-        existed."""
-        dv_commits = self._dv_commits()
-        snap = self._latest_snapshot() or {}
-        manifests = self._manifests_from(snap, dv_commits)
-        return self._prune_paths(manifests, where), self._live_dvs(dv_commits, snap)
+        return state.manifests
 
     def _prune_paths(self, manifests: list[dict], where: list[tuple] | None) -> list[str]:
         _check_ops(where)
         return [
             os.path.join(base, e["name"])
-            for e, base in self._listed_entries(manifests, self.root)
+            for e, base in self._listed_entries(manifests)
             if _entry_may_match(e, where)
         ]
 
@@ -3165,11 +3049,11 @@ class ManifestSinkTable:
         zone-map pruning against ``where`` — a conjunctive list of
         ``(column, op, literal)`` with op in ==, <, <=, >, >=. A file is
         dropped only when its manifest min/max bounds PROVE no row matches;
-        files without stats (legacy markers, unsupported column types) are
+        files without stats for a column (unsupported column types) are
         always kept. This is the introspection surface the data-skipping
         tests pin: ``len(visible_files(point_pred)) < len(visible_files())``.
         """
-        return self._prune_paths(self._visible_manifests(), where)
+        return self._prune_paths(self._list_state().manifests, where)
 
     def read(self, spark: SparkSession, where: list[tuple] | None = None) -> DataFrame:
         """Visible rows; with ``where``, a pruned read: manifest stats drop
@@ -3177,10 +3061,11 @@ class ManifestSinkTable:
         predicates are applied as a residual row filter, so
         ``read(spark, where=p)`` always equals ``read(spark).filter(p)``.
         The file list and the tombstone relation come from ONE
-        ``_read_state`` listing, so a concurrent MOR upsert is never seen
-        torn (inserts without tombstones or vice versa — ADVICE r11).
+        ``_list_state``, so a concurrent MOR upsert is never seen torn
+        (inserts without tombstones or vice versa — ADVICE r11).
         """
-        paths, dvs = self._read_state(where)
+        state = self._list_state()
+        paths, dvs = self._prune_paths(state.manifests, where), state.dvs
         schema = self.schema()
         if not paths:
             if schema is None:
@@ -3259,8 +3144,8 @@ class ManifestSinkTable:
         built with ``sum_columns=``; AVG = sum/nonnull at the caller) and
         ``"nonnull": {col: n}`` for ``count_cols`` (rows - footer null
         count — free for every column, no configuration). Raises instead
-        of guessing when any visible file lacks a requested stat (legacy
-        pre-stats markers, unsupported column types, un-stamped sums) — a
+        of guessing when any visible file lacks a requested stat
+        (unsupported column types, un-stamped sums) — a
         partial-stats answer would be silently wrong. Integer sums are
         exact; float sums carry the per-file association caveat noted in
         _collect_file_stats. Sums/nulls survive compaction and COW
@@ -3270,7 +3155,7 @@ class ManifestSinkTable:
         # manifest row counts include tombstoned rows; a stats-only
         # answer would overcount. compact() absorbs the DVs and restores
         # the zero-scan path — raise, never guess. The check and the
-        # listing below share ONE dv/snapshot read (_dv_free_manifests).
+        # listing below share ONE _list_state (_dv_free_manifests).
         manifests = self._dv_free_manifests("stats-only aggregates")
         sum_cols = sum_cols or []
         count_cols = count_cols or []
@@ -3280,13 +3165,8 @@ class ManifestSinkTable:
         sums: dict[str, object] = {c: None for c in sum_cols}
         nonnull: dict[str, int] = {c: 0 for c in count_cols}
         for m in manifests:
-            entries = m["files"]
-            if entries is None:
-                raise ValueError(f"legacy layout without stats under {m['dir']}; compact first")
-            for e in entries:
-                rows = e.get("rows")
-                if rows is None:
-                    raise ValueError(f"file {e.get('name')} has no row count in the manifest")
+            for e in m["files"]:
+                rows = e["rows"]
                 total += rows
                 if rows == 0:
                     continue  # empty part files have no row groups, hence no stats

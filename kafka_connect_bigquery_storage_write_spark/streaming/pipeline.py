@@ -224,10 +224,9 @@ class IngestPipeline:
         if self.config.upsert_order_col:
             w = Window.partitionBy(*keys).orderBy(F.col(self.config.upsert_order_col).desc())
             rows = rows.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
-        if self.config.upsert_mode != "mor" and (
-            self._sink.schema() is None
-            or not self._sink.committed_ids()
-            and not self._sink._latest_snapshot()
+        state = self._sink._list_state() if self.config.upsert_mode != "mor" else None
+        if state is not None and (
+            self._sink.schema() is None or not state.batch_ids and not state.snap
         ):
             # first batch: nothing to merge onto — plain append seeds the
             # table. COW only: upsert_mor seeds itself (and in pending

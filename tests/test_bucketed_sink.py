@@ -62,7 +62,7 @@ def test_bucketed_sink_join_has_no_exchange(spark, tmp_path, no_broadcast):
 def test_every_data_file_is_bucket_named_and_manifest_stamped(spark, tmp_path):
     sink = _mk(spark, tmp_path)
     sink.write_batch(_kv(spark, 0, 100), 0)
-    for m in sink._visible_manifests():
+    for m in sink._list_state().manifests:
         for e in m["files"]:
             assert _bucket_of(e["name"]) is not None
             assert e.get("bucket") == _bucket_of(e["name"])
@@ -79,7 +79,7 @@ def test_compaction_preserves_bucket_layout(spark, tmp_path, no_broadcast):
     assert sink.compact(spark) is not None
     assert sorted(r["k"] for r in sink.read(spark).collect()) == before
     # every compacted file still carries a bucket id
-    for m in sink._visible_manifests():
+    for m in sink._list_state().manifests:
         for e in m["files"]:
             assert _bucket_of(e["name"]) is not None, e
     # one file per non-empty bucket after compaction
@@ -109,7 +109,7 @@ def test_pruned_merge_keeps_bucket_layout(spark, tmp_path, no_broadcast):
     assert res is not None
     rows = {r["k"]: r["v"] for r in sink.read(spark).collect()}
     assert rows[5] == "U" and rows[900] == "NEW" and rows[150] == "a" and len(rows) == 201
-    for m in sink._visible_manifests():
+    for m in sink._list_state().manifests:
         for e in m["files"]:
             assert _bucket_of(e["name"]) is not None, e
     try:
@@ -162,7 +162,7 @@ def test_bucket_spec_persists_and_validates(spark, tmp_path):
     again = ManifestSinkTable(str(tmp_path / "t"), write_mode="committed")
     assert again.bucket_spec == (4, ("k",))
     again.write_batch(_kv(spark, 10, 20), 1)
-    for m in again._visible_manifests():
+    for m in again._list_state().manifests:
         for e in m["files"]:
             assert _bucket_of(e["name"]) is not None
     with pytest.raises(ValueError, match="does not match"):

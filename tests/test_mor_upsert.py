@@ -296,7 +296,7 @@ def test_mor_crash_race_replay_self_heals(spark, tmp_path, monkeypatch):
     upd = _kv(spark, [(5, "U"), (150, "U"), (900, "N")])
 
     # the racing compactor's listing happens FIRST (pre-publish state)
-    pre_manifests = sink._visible_manifests()
+    pre_manifests = sink._list_state().manifests
     pre_batch_ids = sink.committed_ids()
 
     # MOR publish that "crashes" between the dv CAS and the barrier CAS
@@ -351,7 +351,7 @@ def test_rewrite_repairs_void_mor_before_absorbing(spark, tmp_path, monkeypatch)
 
     sink = _ranged_sink(spark, tmp_path, n_batches=2)
     upd = _kv(spark, [(5, "U"), (150, "U"), (900, "N")])
-    pre_manifests = sink._visible_manifests()
+    pre_manifests = sink._list_state().manifests
     pre_batch_ids = sink.committed_ids()
 
     def crash(_prior):
@@ -572,7 +572,7 @@ def test_rewrite_repairs_dv_voided_mid_listing(spark, tmp_path, monkeypatch):
 
     sink = _ranged_sink(spark, tmp_path, n_batches=2)
     upd = _kv(spark, [(5, "U"), (150, "U"), (900, "N")])
-    pre_manifests = sink._visible_manifests()
+    pre_manifests = sink._list_state().manifests
     pre_batch_ids = sink.committed_ids()
 
     def crash(_prior):

@@ -67,23 +67,48 @@ def _racer_dvdel(sink, spark):
     assert res is not None and res[1] == len(DVDEL)
 
 
+def _racer_compact(sink, spark):
+    sink.compact(spark)
+
+
+def _racer_compact_upsert(sink, spark):
+    _racer_compact(sink, spark)
+    _racer_upsert(sink, spark)
+
+
 RACERS = {
     "append": (_racer_append, lambda m: m.update(APPEND)),
     "upsert": (_racer_upsert, lambda m: m.update(UPSERT)),
     "dvdel": (_racer_dvdel, lambda m: [m.pop(k) for k in DVDEL]),
+    "compact": (_racer_compact, lambda m: None),
+    "compact_upsert": (_racer_compact_upsert, lambda m: m.update(UPSERT)),
 }
+UPSERT_RACERS = ("upsert", "compact_upsert")
 
 # injection points: the instance method whose FIRST call during the
-# victim triggers the racer (each is a distinct gap in the listing
-# sequence: before everything; between snapshot and DV log; between DV
-# log and batch markers; between the repair pass and the listing)
+# victim triggers the racer. A victim's first listing (``_list_state``)
+# reads the snapshot index, the DV log, the snapshot, the staged markers,
+# the batch markers and epochs, then the epoch index: ``_dv_commits``
+# lands the racer between the DV log and the snapshot read,
+# ``_latest_snapshot`` between the snapshot and the markers,
+# ``_committed_manifests`` after the markers. A rewriter's
+# first listing is its repair pass's; ``_repair_void_mors`` lands the
+# racer between that pass and the listing the rewrite absorbs.
 HOOKS = ["_latest_snapshot", "_dv_commits", "_committed_manifests", "_repair_void_mors"]
 
 VICTIMS = {
     "compact": lambda s, sp: s.compact(sp),
     "binpack": lambda s, sp: s.compact_small_files(sp, small_rows=10**9),
     "delete": lambda s, sp: s.delete_where_pruned(sp, [("k", "<", 5)]),
+    "dvdel": lambda s, sp: s.delete_where_dv(sp, [("k", "<", 5)]),
 }
+# delete_where_dv never runs the rewriters' repair pass
+GRID = [
+    (hook, victim)
+    for victim in sorted(VICTIMS)
+    for hook in HOOKS
+    if not (victim == "dvdel" and hook == "_repair_void_mors")
+]
 
 
 def _inject(monkeypatch, sink, hook: str, racer) -> dict:
@@ -114,8 +139,7 @@ def _content(sink, spark) -> dict:
     return got
 
 
-@pytest.mark.parametrize("victim", sorted(VICTIMS))
-@pytest.mark.parametrize("hook", HOOKS)
+@pytest.mark.parametrize("hook,victim", GRID)
 @pytest.mark.parametrize("racer", sorted(RACERS))
 def test_racer_lands_mid_victim(spark, tmp_path, monkeypatch, victim, hook, racer):
     sink = _seeded(spark, tmp_path)
@@ -127,7 +151,10 @@ def test_racer_lands_mid_victim(spark, tmp_path, monkeypatch, victim, hook, race
 
     expected = dict(SEED)
     racer_model(expected)
-    if victim == "delete" and vic_result is not None:
+    if victim == "dvdel":
+        # a merge-on-read delete never loses to a racer: it recomputes
+        assert vic_result is not None and vic_result[1] == len(VICDEL), f"dvdel reported {vic_result}"
+    if victim in ("delete", "dvdel") and vic_result is not None:
         for k in VICDEL:
             expected.pop(k, None)
     assert _content(sink, spark) == expected
@@ -137,7 +164,7 @@ def test_racer_lands_mid_victim(spark, tmp_path, monkeypatch, victim, hook, race
         assert sink.write_batch(
             _kv(spark, sorted(APPEND.items())).coalesce(1), 50
         ).already_exists
-    elif racer == "upsert":
+    elif racer in UPSERT_RACERS:
         assert sink.upsert_mor(
             spark, _kv(spark, sorted(UPSERT.items())), keys=["k"], batch_id=51
         ) is None
@@ -150,6 +177,73 @@ def test_racer_lands_mid_victim(spark, tmp_path, monkeypatch, victim, hook, race
     assert _content(sink, spark) == expected
     rep = sink.maintenance_report(small_rows=1)
     assert not rep["binpack_due"] and rep["n_void_mor_batches"] == 0
+
+
+@pytest.mark.parametrize("victim", ["binpack", "compact", "delete"])
+def test_dv_publish_lands_inside_rewrite_listing(spark, tmp_path, monkeypatch, victim):
+    """The grid's hooks fire in a rewrite's repair pass, which lists
+    first; this one arms after that pass, so a DV delete's commit and
+    barrier land inside the listing the rewrite absorbs — between its
+    DV log and its snapshot read. The rewrite must list again and apply
+    the DV, or lose its CAS to the barrier; absorbing the DV's files
+    without it would resurrect the deleted rows."""
+    sink = _seeded(spark, tmp_path)
+    armed = {}
+    real_repair = type(sink)._repair_void_mors
+
+    def arming_repair(self, sp):
+        real_repair(self, sp)
+        if not armed:
+            armed["state"] = _inject(monkeypatch, sink, "_dv_commits", lambda: _racer_dvdel(sink, spark))
+
+    monkeypatch.setattr(type(sink), "_repair_void_mors", arming_repair)
+    vic_result = VICTIMS[victim](sink, spark)
+    monkeypatch.undo()
+    assert armed["state"]["fired"]
+    expected = {k: v for k, v in SEED.items() if k not in DVDEL}
+    if victim == "delete" and vic_result is not None:
+        expected = {k: v for k, v in expected.items() if k not in VICDEL}
+    assert _content(sink, spark) == expected
+
+
+def test_dv_guard_rejects_barrier_over_a_rewrite(spark, tmp_path, monkeypatch):
+    """The tombstone guard loop accepts another writer's barrier as
+    "files unchanged" only when the barrier copies the layout the DV was
+    computed against. Here a compaction whose listing predates the DV
+    commit lands its snapshot between the DV CAS and the delete's
+    barrier, and a MOR upsert then puts its own barrier on top of that
+    compaction: the delete's DV names pre-compaction files, so it is
+    void and must be recomputed — a barrier over a real rewrite proves
+    nothing about the DV's files."""
+    from kafka_connect_bigquery_storage_write_spark.sinks.sink_table import _collect_file_stats
+
+    sink = _seeded(spark, tmp_path)
+    pre_files, pre_ids = sink.visible_files(), sink.committed_ids()
+    real = type(sink)._create_barrier_snapshot
+    fired = {"done": False}
+
+    def racing_barrier(self, prior):
+        if not fired["done"]:
+            fired["done"] = True
+            # the stale compactor materializes its pre-delete listing
+            new_dir = "compacted-0-stale"
+            out = os.path.join(sink.root, "data", new_dir)
+            spark.read.schema(sink.schema()).parquet(*pre_files).coalesce(1).write.parquet(out)
+            names = sorted(f for f in os.listdir(out) if f.endswith(".parquet"))
+            assert sink._cas_snapshot(0, [new_dir], pre_ids, {new_dir: _collect_file_stats(out, names)}, [])
+            _racer_upsert(sink, spark)  # its barrier lands on the compaction
+        return real(self, prior)
+
+    monkeypatch.setattr(type(sink), "_create_barrier_snapshot", racing_barrier)
+    res = sink.delete_where_dv(spark, [("k", "<", 5)])
+    monkeypatch.undo()
+    assert fired["done"]
+    assert res is not None and res[1] == len(VICDEL)
+    expected = {k: v for k, v in {**SEED, **UPSERT}.items() if k not in VICDEL}
+    assert _content(sink, spark) == expected, "lost delete: the void DV was accepted"
+    sink.compact(spark)
+    assert sink.visible_dvs() == []
+    assert _content(sink, spark) == expected
 
 
 @pytest.mark.parametrize("hook", ["_dv_commits", "_latest_snapshot", "_committed_manifests"])
@@ -245,7 +339,7 @@ def test_vacuum_mid_racer_reclaims_nothing_needed(spark, tmp_path, monkeypatch, 
     expected = dict(SEED)
     racer_model(expected)
     assert _content(sink, spark) == expected, f"vacuum reclaimed live data: {removed}"
-    if racer == "upsert":
+    if racer in UPSERT_RACERS:
         assert sink.upsert_mor(
             spark, _kv(spark, sorted(UPSERT.items())), keys=["k"], batch_id=51
         ) is None
@@ -297,6 +391,26 @@ def test_pending_staging_never_tears_read(spark, tmp_path, monkeypatch, hook):
     expected = dict(SEED)
     expected.update(PENDING_UPSERT)
     assert _content(sink, spark) == expected
+
+
+@pytest.mark.parametrize("hook", ["_dv_commits", "_latest_snapshot"])
+def test_read_not_torn_by_commit(spark, tmp_path, monkeypatch, hook):
+    """A commit() publishing a staged MERGE mid-listing of a read: the
+    read lists the DV log before the epoch, so its listing must not pair
+    the epoch's insert dirs with the merge's tombstones still listed as
+    unpublished — superseded and new versions side by side, a state that
+    never existed. The read is the pre-commit or post-commit state."""
+    sink = _pending_seeded(spark, tmp_path)
+    _racer_stage(sink, spark)  # staged merge, batch 61
+    state = _inject(monkeypatch, sink, hook, lambda: sink.commit())
+    df = sink.read(spark)
+    monkeypatch.undo()
+    assert state["fired"]
+    got = {}
+    for r in df.collect():
+        assert r["k"] not in got, f"duplicate key {r['k']}: torn transaction"
+        got[r["k"]] = r["v"]
+    assert got in (SEED, {**SEED, **PENDING_UPSERT}), "torn read: a state that never existed"
 
 
 @pytest.mark.parametrize("hook", ["_staged_manifests", "_dv_commits"])

@@ -384,7 +384,7 @@ def test_read_as_of_requires_exactly_one_anchor(spark, kv_df, tmp_path):
         sink.read_as_of(spark, epoch=0, batch_id=0)
 
 
-# -- vacuum retention & legacy-manifest compatibility (ADVICE r6) -----------
+# -- vacuum retention (ADVICE r6) ---------------------------------------------
 
 
 def test_vacuum_retention_protects_inflight_attempt(spark, kv_df, tmp_path):
@@ -412,49 +412,6 @@ def test_vacuum_retention_protects_inflight_attempt(spark, kv_df, tmp_path):
     ]
     assert not inflight.exists() and not fresh.exists()
     assert sink.read(spark).count() == 2  # committed attempt untouched
-
-
-def test_legacy_manifest_layout_still_readable(spark, kv_df, tmp_path):
-    """Tables written by the pre-attempt layout (markers {"batch_id"} only,
-    epochs {"batch_ids"} only, data directly under batch=<id>) must stay
-    readable and idempotent — the fallback maps them to batch=<id>."""
-    import json
-    import os
-
-    root = tmp_path / "t"
-    sink = ManifestSinkTable(str(root), write_mode="committed")
-    # hand-write a legacy table: data at batch=0 (no attempt=), legacy marker
-    kv_df.write.parquet(str(root / "data" / "batch=0"))
-    kv_df.write.parquet(str(root / "data" / "batch=1"))
-    (root / "_schema.json").write_text(kv_df.schema.json())
-    with open(root / "_commits" / "batch-0.marker", "w") as f:
-        json.dump({"batch_id": 0}, f)
-    with open(root / "_commits" / "epoch-0.json", "w") as f:
-        json.dump({"batch_ids": [1]}, f)
-    assert sink.read(spark).count() == 4
-    assert sink.committed_ids() == [0, 1]
-    # replay of a legacy id is still idempotent (R14)
-    assert sink.write_batch(kv_df, 0).already_exists
-    # time travel across the legacy epoch resolves the legacy dir
-    assert sink.read_as_of(spark, batch_id=0).count() == 2
-    # and a NEW batch through the current code coexists with legacy dirs
-    sink.write_batch(kv_df, 2)
-    assert sink.read(spark).count() == 6
-    # vacuum must not treat a live flat-layout batch's data FILES as
-    # loser attempt dirs (regression: NotADirectoryError / data loss)
-    assert sink.vacuum(retention_s=0.0) == []
-    assert sink.read(spark).count() == 6
-    assert sink.read_as_of(spark, batch_id=0).count() == 2
-    # legacy staged marker (pending-mode table)
-    pend = ManifestSinkTable(str(tmp_path / "p"), write_mode="pending")
-    kv_df.write.parquet(str(tmp_path / "p" / "data" / "batch=5"))
-    (tmp_path / "p" / "_schema.json").write_text(kv_df.schema.json())
-    with open(tmp_path / "p" / "_staged" / "5.marker", "w") as f:
-        json.dump({"batch_id": 5}, f)
-    assert pend.commit() == [5]
-    assert pend.read(spark).count() == 2
-    assert pend.vacuum(retention_s=0.0) == []
-    assert pend.read(spark).count() == 2
 
 
 def test_randomized_op_interleavings_preserve_visibility(spark, kv_df, tmp_path):
@@ -575,22 +532,6 @@ def test_data_skipping_prunes_files(spark, tmp_path):
     # unsupported op fails loudly rather than silently scanning
     with pytest.raises(ValueError, match="unsupported predicate op"):
         sink.visible_files([("k", "!=", 1)])
-
-
-def test_data_skipping_legacy_manifest_keeps_everything(spark, kv_df, tmp_path):
-    """A legacy marker (no "files" key) must read as keep-everything."""
-    import json
-    import os
-
-    root = tmp_path / "t"
-    sink = ManifestSinkTable(str(root), write_mode="committed")
-    kv_df.write.parquet(str(root / "data" / "batch=0"))
-    (root / "_schema.json").write_text(kv_df.schema.json())
-    with open(root / "_commits" / "batch-0.marker", "w") as f:
-        json.dump({"batch_id": 0}, f)
-    n_parquet = len([f for f in os.listdir(root / "data" / "batch=0") if f.endswith(".parquet")])
-    assert len(sink.visible_files([("int_value", "==", -1)])) == n_parquet  # no stats -> no pruning
-    assert sink.read(spark, where=[("int_value", "==", 123)]).count() == 2
 
 
 def test_data_skipping_pending_epoch_carries_stats(spark, tmp_path):
@@ -780,7 +721,7 @@ def test_bloom_skipping_prunes_scattered_keys(spark, tmp_path):
 
     # zone maps alone cannot prune a mid-range key (all ranges straddle it)
     stats_only = [
-        e for m in sink._visible_manifests() for e in m["files"]
+        e for m in sink._list_state().manifests for e in m["files"]
     ]
     from kafka_connect_bigquery_storage_write_spark.sinks.sink_table import _file_may_match
 
